@@ -17,7 +17,7 @@ Each weighter exposes three evaluation surfaces:
 Only ``Exp`` (and trivially ``Const``) *factorizes* over time:
 ``w(a+b) = w(a) * w(b)``. The superstep engine exploits factorization to
 carry state forward with one vectorized multiply per superstep and to run
-the distributed affine-scan path; non-factorizing weighters (Pow, Rayleigh)
+the distributed walk path; non-factorizing weighters (Pow, Rayleigh)
 must always decay from the stored ``last_activation`` — never compound.
 """
 

@@ -49,7 +49,6 @@ from .temporal_katz_distributed import (
     DistributedTruncatedTemporalKatz,
     attach_closure_components,
 )
-from .temporal_pagerank import TemporalPageRank
 from .temporal_pagerank_distributed import DistributedTemporalPageRank
 from .triangles import (
     attribute_assortativity,
@@ -65,7 +64,6 @@ __all__ = [
     "DistributedTemporalKatz",
     "DistributedTruncatedTemporalKatz",
     "attach_closure_components",
-    "TemporalPageRank",
     "DistributedTemporalPageRank",
     "DecayedIndegree",
     "DistributedDecayedIndegree",

@@ -170,11 +170,9 @@ def scd2_intervals(
     if dedup_consecutive:
         changed = F.lit(False)
         for v in value_cols:
-            prev = F.lag(F.col(v)).over(w)
-            changed = changed | ~(
-                (F.col(v) == prev)
-                | (F.col(v).isNull() & prev.isNull())
-            )
+            # null-safe, like the oracle's IS DISTINCT FROM: a NULL
+            # transition is a change, never an unknown
+            changed = changed | ~F.col(v).eqNullSafe(F.lag(F.col(v)).over(w))
         base = (
             base.withColumn(
                 "__keep",

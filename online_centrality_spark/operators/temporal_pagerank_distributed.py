@@ -19,9 +19,8 @@ State is a DataFrame ``(node, closure, vals: array<double>)`` with
 there is no basis to carry — a group with state but no edges is a pure
 pass-through that still emits every read-out.
 
-This replaces the driver-side ``orderBy(seq).toPandas()`` fold (the
-round-1 scale-killer) for node spaces beyond the scan path's
-``2n <= 256`` cap.
+This is the one Temporal PageRank engine: no step collects edges or
+state to the driver.
 """
 
 from __future__ import annotations
@@ -350,7 +349,7 @@ class DistributedTemporalPageRank:
         # surface closure skew: the per-closure ordered fold serializes
         # each closure's edges into one task, so a giant WCC bounds the
         # whole batch (semantics-forced — the m(u) *= beta recurrence
-        # neither factorizes nor stays sparse under scan composition).
+        # does not factorize, so the walk expansion does not apply).
         # max/total edge share per closure lands in the convergence
         # parquet so an operator sees the bound instead of guessing.
         tot = sum(m["edges"] for m in self.walk_metrics)

@@ -1,11 +1,9 @@
 """Distributed temporal-walk (Jacobi path-length) kernel for Temporal Katz.
 
-The third execution path (besides ``fold`` and ``scan`` in
-``temporal_katz.py``), designed for **large node spaces and long windows**
-where the affine-scan path is unusable: its transfer matrices are dense
-``n x n`` *and* their entries grow like ``(1 + beta * chain_density)^E``
-within a window, overflowing float64 on busy windows regardless of how
-bounded the true scores are.
+The distributed execution path of ``temporal_katz.py`` (besides the
+single-task ``fold``), designed for **large node spaces and long
+windows**: no dense ``n x n`` state, and values stay bounded whenever the
+true scores are (unbounded dynamics raise instead of overflowing).
 
 Semantics (identical to the reference computer,
 ``temporal_katz_computer.py:43-51``): per edge ``(u, v, t)`` in stable

@@ -127,7 +127,7 @@ class SuperstepDriver:
         static_distributed: bool = False,
     ) -> list[SnapshotInterval]:
         """``batch_size`` > 1 groups consecutive snapshot intervals so
-        scan-path temporal measures advance B windows with one Spark job
+        walk-path temporal measures advance B windows with one Spark job
         (``run_batch``); read-outs per boundary stay driver-side. Other
         measures run one superstep per interval as usual.
 

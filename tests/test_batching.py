@@ -3,11 +3,14 @@
 import pytest
 
 from online_centrality_spark.functions.weights import ExponentialWeighter
+from online_centrality_spark.operators import (
+    DistributedTemporalPageRank,
+    attach_closure_components,
+)
 from online_centrality_spark.operators.temporal_katz import (
     TemporalKatz,
     TruncatedTemporalKatz,
 )
-from online_centrality_spark.operators.temporal_pagerank import TemporalPageRank
 from online_centrality_spark.plans.superstep import SuperstepDriver
 from online_centrality_spark.sources.edges import edges_from_transcripts
 from online_centrality_spark.sources.transcripts import transcripts_spark
@@ -20,30 +23,45 @@ from tests.test_temporal_parity import (
     run_oracle,
 )
 
+# a wide case: more params than the narrow one, and a different batch size
+EXP_PARAMS6 = [
+    (0.5, ExponentialWeighter(norm=1800.0 * (i + 1), base=0.5)) for i in range(6)
+]
+TPR_PARAMS5 = [(0.85, 0.1 * i) for i in range(5)]
 
-def test_batched_driver_matches_oracle(spark, tmp_path):
+
+@pytest.mark.parametrize(
+    "params_tk, params_tpr, batch_size",
+    [(EXP_PARAMS, TPR_PARAMS, 7), (EXP_PARAMS6, TPR_PARAMS5, 4)],
+    ids=["p2_batch7", "p6_batch4"],
+)
+def test_batched_driver_matches_oracle(
+    spark, tmp_path, params_tk, params_tpr, batch_size
+):
     tr = transcripts_spark(spark, n_convs=40, max_turns=14, seed=11)
     edges, nodes = edges_from_transcripts(tr)
-    edges = edges.persist()
+    edges = attach_closure_components(edges).persist()
     rows = edges.orderBy("seq").collect()
     stream = [(int(r["t"]), int(r["src"]), int(r["dst"])) for r in rows]
     n_nodes = nodes.count()
     boundaries = make_boundaries(stream, delta=1800, count=20)
     k = 2
-    captured, _ = run_oracle(stream, boundaries, "epoch", EXP_PARAMS, k=k)
+    captured, _ = run_oracle(
+        stream, boundaries, "epoch", params_tk, k=k, tpr_params=params_tpr
+    )
 
-    tk = TemporalKatz(EXP_PARAMS, n_nodes, path="scan")
-    ttk = TruncatedTemporalKatz(EXP_PARAMS, n_nodes, k=k, path="scan")
-    tpr = TemporalPageRank(TPR_PARAMS, n_nodes)
+    tk = TemporalKatz(params_tk, n_nodes, path="walk")
+    ttk = TruncatedTemporalKatz(params_tk, n_nodes, k=k, path="walk")
+    tpr = DistributedTemporalPageRank(params_tpr)
     driver = SuperstepDriver(spark, str(tmp_path / "out_batched"))
     sched = driver.run(
-        edges, boundaries, "epoch", online=[tk, ttk, tpr], batch_size=7
+        edges, boundaries, "epoch", online=[tk, ttk, tpr], batch_size=batch_size
     )
     assert [s.interval_id for s in sched] == sorted(captured.keys())
     got = engine_scores_map(driver)
     for snap in sched:
         i = snap.interval_id
-        for j, (beta, w) in enumerate(EXP_PARAMS):
+        for j, (beta, w) in enumerate(params_tk):
             pid = "tk_b%0.2f_%s" % (beta, w)
             want = {n: v[j] for n, v in captured[i]["tk"].items()}
             assert_close_maps(got[(pid, i)], want, f"tk {pid} snap {i}")
@@ -51,60 +69,11 @@ def test_batched_driver_matches_oracle(spark, tmp_path):
                 pid = "ttk_b%0.2f_%s_length_limit_%i" % (beta, w, layer + 1)
                 want = {n: v[j] for n, v in captured[i]["ttk"][layer].items()}
                 assert_close_maps(got[(pid, i)], want, f"ttk {pid} snap {i}")
-        for j, (a, b) in enumerate(TPR_PARAMS):
+        for j, (a, b) in enumerate(params_tpr):
             pid = "tpr_a%0.2f_b%0.2f" % (a, b)
             want = {n: v[j] for n, v in captured[i]["tpr"].items() if v[j] > 0}
             assert_close_maps(got[(pid, i)], want, f"tpr {pid} snap {i}")
-
-
-def test_numpy2d_kernel_path_matches_oracle(spark, tmp_path):
-    """p >= 5 switches the segment kernels to the in-place numpy layout."""
-    from online_centrality_spark.functions.weights import ExponentialWeighter
-
-    params6 = [
-        (0.5, ExponentialWeighter(norm=1800.0 * (i + 1), base=0.5))
-        for i in range(6)
-    ]
-    tpr_params5 = [(0.85, 0.1 * i) for i in range(5)]
-    tr = transcripts_spark(spark, n_convs=25, max_turns=10, seed=5)
-    edges, nodes = edges_from_transcripts(tr)
-    edges = edges.persist()
-    rows = edges.orderBy("seq").collect()
-    stream = [(int(r["t"]), int(r["src"]), int(r["dst"])) for r in rows]
-    n_nodes = nodes.count()
-    boundaries = make_boundaries(stream, delta=3600, count=8)
-    captured, _ = run_oracle(stream, boundaries, "epoch", params6, k=2)
-    # oracle helper uses TPR_PARAMS; rebuild tpr oracle manually
-    from tests.oracle.reference_oracle import OracleReplay, OracleTemporalPageRank
-
-    otpr = OracleTemporalPageRank(tpr_params5)
-    cap_tpr = {}
-    OracleReplay(stream, "epoch").run(
-        boundaries, [otpr],
-        on_snapshot=lambda i, b: cap_tpr.__setitem__(i, otpr.snapshot()),
-    )
-
-    tk = TemporalKatz(params6, n_nodes, path="scan")
-    ttk = TruncatedTemporalKatz(params6, n_nodes, k=2, path="scan")
-    tpr = TemporalPageRank(tpr_params5, n_nodes)
-    driver = SuperstepDriver(spark, str(tmp_path / "out_np2d"))
-    sched = driver.run(
-        edges, boundaries, "epoch", online=[tk, ttk, tpr], batch_size=4
-    )
-    got = engine_scores_map(driver)
-    for snap in sched:
-        i = snap.interval_id
-        for j, (beta, w) in enumerate(params6):
-            pid = "tk_b%0.2f_%s" % (beta, w)
-            want = {n: v[j] for n, v in captured[i]["tk"].items()}
-            assert_close_maps(got[(pid, i)], want, f"tk {pid} snap {i}")
-            pid = "ttk_b%0.2f_%s_length_limit_2" % (beta, w)
-            want = {n: v[j] for n, v in captured[i]["ttk"][1].items()}
-            assert_close_maps(got[(pid, i)], want, f"ttk {pid} snap {i}")
-        for j, (a, b) in enumerate(tpr_params5):
-            pid = "tpr_a%0.2f_b%0.2f" % (a, b)
-            want = {n: v[j] for n, v in cap_tpr[i].items() if v[j] > 0}
-            assert_close_maps(got[(pid, i)], want, f"tpr {pid} snap {i}")
+    edges.unpersist()
 
 
 def test_batched_walk_writes_convergence_metrics(spark, tmp_path):

@@ -20,10 +20,13 @@ from online_centrality_spark.evaluation.kernels import (
     weighted_kendall,
 )
 from online_centrality_spark.functions.weights import ExponentialWeighter
+from online_centrality_spark.operators import (
+    DistributedTemporalPageRank,
+    attach_closure_components,
+)
 from online_centrality_spark.operators.static_katz import katz_numpy
 from online_centrality_spark.operators.static_pagerank import pagerank_numpy
 from online_centrality_spark.operators.temporal_katz import TemporalKatz
-from online_centrality_spark.operators.temporal_pagerank import TemporalPageRank
 from online_centrality_spark.plans.superstep import SuperstepDriver
 
 
@@ -85,9 +88,11 @@ def test_concept_drift_full_pipeline(spark, tmp_path):
         n,
         path="walk",
     )
-    tpr = TemporalPageRank([(0.85, 0.05)], n)
+    tpr = DistributedTemporalPageRank([(0.85, 0.05)])
     driver = SuperstepDriver(spark, str(tmp_path / "drift"))
-    driver.run(edges, boundaries, "index", online=[tk, tpr])
+    driver.run(
+        attach_closure_components(edges), boundaries, "index", online=[tk, tpr]
+    )
     scores = driver.scores().toPandas()
 
     def vec(pid, snap):

@@ -5,9 +5,12 @@ import shutil
 import pytest
 
 from online_centrality_spark.functions.weights import ExponentialWeighter
+from online_centrality_spark.operators import (
+    DistributedTemporalPageRank,
+    attach_closure_components,
+)
 from online_centrality_spark.operators.decayed_indegree import DecayedIndegree
 from online_centrality_spark.operators.temporal_katz import TemporalKatz
-from online_centrality_spark.operators.temporal_pagerank import TemporalPageRank
 from online_centrality_spark.plans.superstep import SuperstepDriver
 from online_centrality_spark.sources.edges import edges_from_transcripts
 from online_centrality_spark.sources.transcripts import transcripts_spark
@@ -15,10 +18,10 @@ from online_centrality_spark.sources.transcripts import transcripts_spark
 PARAMS = [(1.0, ExponentialWeighter(norm=3600.0, base=0.5))]
 
 
-def make_measures(spark, n_nodes, tk_path="scan"):
+def make_measures(spark, n_nodes, tk_path):
     return [
         TemporalKatz(PARAMS, n_nodes, path=tk_path),
-        TemporalPageRank([(0.85, 0.5)], n_nodes),
+        DistributedTemporalPageRank([(0.85, 0.5)]),
         DecayedIndegree([ExponentialWeighter(norm=3600.0, base=0.5)], spark),
     ]
 
@@ -30,11 +33,11 @@ def scores_map(driver):
     }
 
 
-@pytest.mark.parametrize("tk_path", ["scan", "walk"])
+@pytest.mark.parametrize("tk_path", ["walk"])
 def test_kill_and_resume_identical(spark, tmp_path, tk_path):
     tr = transcripts_spark(spark, n_convs=30, max_turns=10, seed=3)
     edges, nodes = edges_from_transcripts(tr)
-    edges = edges.persist()
+    edges = attach_closure_components(edges).persist()
     n_nodes = nodes.count()
     t0 = edges.agg({"t": "min"}).collect()[0][0]
     boundaries = [t0 + 1800 * (i + 1) for i in range(10)]

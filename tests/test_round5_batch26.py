@@ -82,7 +82,8 @@ def test_readability_clamps_extremes(spark):
 
 def test_scd2_intervals_by_hand(spark):
     """u1: A@10, A@20 (collapsed), B@30 -> [A: 10..30), [B: 30..NULL);
-    u2 single row -> open interval."""
+    u2 single row -> open interval; A@10, NULL@20, A@30 -> three
+    intervals (a NULL transition is a change)."""
     import datetime
 
     TS0 = datetime.datetime(2024, 1, 1)
@@ -111,6 +112,21 @@ def test_scd2_intervals_by_hand(spark):
     # without compaction the duplicate A row keeps its own interval
     out2 = scd2_intervals(df, ["user_id"], "ts", ["state"]).collect()
     assert len(out2) == 4
+
+    nulls = spark.createDataFrame(
+        [("u3", ts(10), "A"), ("u3", ts(20), None), ("u3", ts(30), "A")],
+        "user_id string, ts timestamp, state string",
+    )
+    out3 = scd2_intervals(
+        nulls, ["user_id"], "ts", ["state"], dedup_consecutive=True
+    ).collect()
+    assert sorted(
+        (r["valid_from_us"], r["state"], r["valid_to_us"]) for r in out3
+    ) == [
+        (base + 10_000_000, "A", base + 20_000_000),
+        (base + 20_000_000, None, base + 30_000_000),
+        (base + 30_000_000, "A", None),
+    ]
 
 
 def test_scd2_intervals_validates_args(spark):

@@ -1,9 +1,8 @@
 """Distributed-state Temporal PageRank: per-closure ordered fold.
 
 Parity vs the reference-semantics oracle on a multi-component fixture
-with a >256-node space (beyond the scan path's 2n <= 256 cap — the node
-space where round 1 had no viable TPR plan), plus kill/resume parity
-through the SuperstepDriver checkpoint protocol.
+with a 360-node space, plus kill/resume parity through the
+SuperstepDriver checkpoint protocol.
 """
 
 import numpy as np

@@ -5,7 +5,11 @@ test_temporal_parity.py.)"""
 import numpy as np
 import pytest
 
-from online_centrality_spark.functions.weights import ExponentialWeighter
+from online_centrality_spark.functions.weights import (
+    ExponentialWeighter,
+    PowerWeighter,
+    RayleighWeighter,
+)
 from online_centrality_spark.operators.temporal_katz import TemporalKatz
 from online_centrality_spark.operators.walk import plan_decay_chunks
 from tests.oracle.reference_oracle import OracleReplay, OracleTemporalKatz
@@ -142,7 +146,9 @@ def test_walk_components_layout(spark):
 
 
 def test_walk_divergence_guard(spark):
-    """Unbounded dynamics (beta=1, negligible decay, dense chains) raise."""
+    """Unbounded dynamics (beta=1, negligible decay, dense chains) raise,
+    on the explicit walk path and on the default path, which resolves to
+    walk for factorizing weighters."""
     E, n = 4000, 3
     t = np.linspace(0, 10.0, E)
     rng = np.random.default_rng(0)
@@ -151,9 +157,19 @@ def test_walk_divergence_guard(spark):
     stream = list(zip(t.tolist(), src.tolist(), dst.tolist()))
     params = [(1.0, ExponentialWeighter(norm=1e9, base=0.5))]
     df = _edges_df(spark, stream)
-    tk = TemporalKatz(params, n, path="walk")
-    with pytest.raises(ValueError, match="overflowed"):
-        tk.run_batch(df, [(0, 10.0, 10.0)])
+    for path in ("walk", "auto"):
+        tk = TemporalKatz(params, n, path=path)
+        with pytest.raises(ValueError, match="overflowed"):
+            tk.run_batch(df, [(0, 10.0, 10.0)])
+
+    assert TemporalKatz(params, n).path == "walk"
+    for w in (
+        PowerWeighter(norm=3600.0, exponent=-1.0),
+        RayleighWeighter(norm=3600.0, sigma=1.0),
+    ):
+        assert TemporalKatz([(0.5, w)], n).path == "fold"
+    with pytest.raises(ValueError):
+        TemporalKatz(params, n, path="scan")
 
 
 def test_walk_sparse_node_ids_and_self_loops(spark):
