@@ -290,9 +290,7 @@ def bench_tk_driver_distributed(spark, sf_dir, replicas, windows=64):
         params.append((beta, ExponentialWeighter(norm=norm_s * 1e6, base=0.5)))
     width = (t_max - t0) // windows + 1
     boundaries = [int(t0 + (i + 1) * width) for i in range(windows)]
-    tk = DistributedTemporalKatz(
-        params, closure_partitions=spark.sparkContext.defaultParallelism * 2
-    )
+    tk = DistributedTemporalKatz(params)
     # untimed warm-up (spins up Python workers / Arrow path / JIT),
     # matching the headline superstep bench's warm-up convention
     warm = DistributedTemporalKatz(params)

@@ -30,17 +30,14 @@ from __future__ import annotations
 import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from ..functions.weights import Weighter
-from .walk import decay_rate, plan_decay_chunks, run_walk_batch_distributed
-
-_STATE_SCHEMA = T.StructType(
-    [
-        T.StructField("node", T.LongType(), False),
-        T.StructField("closure", T.LongType(), False),
-        T.StructField("vals", T.ArrayType(T.DoubleType()), False),
-    ]
+from .walk import (
+    OVERFLOW_MSG,
+    ClosureStateMeasure,
+    decay_rate,
+    plan_decay_chunks,
+    run_walk_batch_distributed,
 )
 
 
@@ -69,7 +66,7 @@ def attach_closure_components(edges: DataFrame, partitions: int | None = None) -
     return out
 
 
-class DistributedTemporalKatz:
+class DistributedTemporalKatz(ClosureStateMeasure):
     """Param-vectorized temporal Katz with fully distributed state.
 
     Driver-protocol surface mirrors :class:`TemporalKatz` (``measure``,
@@ -80,15 +77,14 @@ class DistributedTemporalKatz:
     """
 
     measure = "tk"
-    distributed = True
     state_frame_names = ("walk_state", "meta")
     _layers = 1
+    _diverged_msg = OVERFLOW_MSG
 
     def __init__(
         self,
         params: list[tuple[float, Weighter]],
         closure_col: str = "closure",
-        closure_partitions: int | None = None,
         tol: float = 1e-12,
         block_size: int = 8192,
     ):
@@ -101,11 +97,9 @@ class DistributedTemporalKatz:
         self.p = len(params)
         self._lambda_max = max(decay_rate(w) for w in self.weighters)
         self.closure_col = closure_col
-        self.closure_partitions = closure_partitions
         self.tol = tol
         self.block_size = block_size
         self.walk_metrics: list[dict] = []
-        self._out_cached: DataFrame | None = None
         self.reset()
 
     def reset(self) -> None:
@@ -116,18 +110,6 @@ class DistributedTemporalKatz:
     def param_ids(self) -> list[str]:
         return ["tk_b%0.2f_%s" % (b, w) for b, w in self.params]
 
-    def can_batch(self) -> bool:
-        return True
-
-    # -- superstep protocol ----------------------------------------------
-    def superstep(self, window: DataFrame | None, hi: float) -> None:
-        if window is None:
-            # decay is lazy: state stays in its current basis and the
-            # next batch's kernel rebases across the whole gap — an
-            # inactive interval is a pure no-op here
-            return
-        self.run_batch(window, [(0, float(hi), float(hi))], readouts=False)
-
     def run_batch(
         self,
         df: DataFrame,
@@ -137,14 +119,10 @@ class DistributedTemporalKatz:
         """Advance over B consecutive windows with ONE Spark job; return
         the tidy read-out DataFrame ``(interval_id, param_id, node_id,
         score)`` for all B boundaries (or None with ``readouts=False``).
-
-        The job output is persisted once; the next-state frame is cut
-        from it with an eager localCheckpoint (bounds lineage across
-        batches), and the read-out frame reads from the same cache.
         """
         chunks = plan_decay_chunks(intervals, self._lambda_max)
         chunk_plan = [(float(c[-1][1]), c) for c in chunks]
-        out, metrics_extractor = run_walk_batch_distributed(
+        out, _ = run_walk_batch_distributed(
             df,
             self.betas,
             self.weighters,
@@ -152,50 +130,14 @@ class DistributedTemporalKatz:
             closure_col=self.closure_col,
             state_in=self.state,
             state_basis=self.basis,
-            closure_partitions=self.closure_partitions,
             tol=self.tol,
             block_size=self.block_size,
             layers=self._layers,
         )
-        if self._out_cached is not None:
-            self._out_cached.unpersist()
-        out = out.persist()
-        self._out_cached = out
-        # one action materializes the cogroup job AND collects the small
-        # per-group convergence/lineage rows
-        self.walk_metrics = [
-            dict(chunk_end=float(chunk_plan[-1][0]), chunks=len(chunk_plan), **m)
-            for m in metrics_extractor(out)
-        ]
-        diverged = [m for m in self.walk_metrics if m["diverged"]]
-        if diverged:
-            raise ValueError(
-                "temporal-walk scores overflowed float64 (unbounded dynamics "
-                f"for these (beta, weighter) params): {diverged[:3]}"
-            )
-        self.state = (
-            out.filter(F.col("kind") == 1)
-            .select("node", "closure", "vals")
-            .localCheckpoint(eager=True)
-        )
+        extra = dict(chunk_end=float(chunk_plan[-1][0]), chunks=len(chunk_plan))
+        ro = self._advance(out, readouts, extra=extra)
         self.basis = float(chunk_plan[-1][0])
-        if not readouts:
-            return None
-        pid_arr = F.array(*[F.lit(p) for p in self.param_ids])
-        return (
-            out.filter(F.col("kind") == 0)
-            .select(
-                F.col("interval").alias("interval_id"),
-                F.col("node").alias("node_id"),
-                F.posexplode("vals").alias("pos", "score"),
-            )
-            .select(
-                "interval_id",
-                pid_arr[F.col("pos")].alias("param_id"),
-                "node_id",
-                "score",
-            )
-        )
+        return ro
 
     def readout_df(self, df_or_none=None) -> DataFrame | None:
         """Scores at the current basis as a DataFrame (no decay shift):
@@ -209,12 +151,6 @@ class DistributedTemporalKatz:
         ).select(pid_arr[F.col("pos")].alias("param_id"), "node_id", "score")
 
     # -- checkpoint protocol (frames, driver-persisted as parquet) -------
-    def release(self) -> None:
-        """Drop the cached job output (bench hygiene / end of replay)."""
-        if self._out_cached is not None:
-            self._out_cached.unpersist()
-            self._out_cached = None
-
     def state_frames(self) -> dict[str, DataFrame | None]:
         spark = None
         if self.state is not None:

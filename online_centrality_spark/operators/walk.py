@@ -37,25 +37,35 @@ Distribution contract: temporal-walk chains never leave a weakly
 connected component of the (time-collapsed) graph, so any partitioning of
 the edge stream by a **node-disjoint closure key** (connected component —
 derivable in-engine via ``walk_layout='components'`` — replica id,
-tenant id, ...) makes tasks independent and the result exact;
-each task resolves its chains locally with the vectorized kernel and
-emits read-out rows + end-state rows.  Two state regimes: driver-held
-``(p, n)`` arrays (broadcast per batch; right for actor dictionaries) or
-fully distributed state via :func:`run_walk_batch_distributed` (state
-co-partitioned with the edges, nothing driver-held — right for unbounded
-node spaces).  Without such a key the caller
-falls back to a single task (still ~4x faster than the per-edge ``fold``
-because all work is vectorized).  Hub actors skew *within* a component;
-they cost O(1) per edge here (prefix sums are oblivious to degree), which
-is the kernel's answer to the north rule's hub-skew clause.
+tenant id, ...) makes groups independent and the result exact.  One
+group kernel, :func:`walk_group`, resolves a group's chains locally and
+returns its read-outs and end state; two state adapters feed it:
+
+- **broadcast state** (:func:`run_walk_batch`): driver-held ``(p, n)``
+  arrays, broadcast per batch and gathered per task in a
+  ``mapInPandas`` kernel (right for actor dictionaries);
+- **distributed state** (:func:`run_walk_batch_distributed`): a state
+  DataFrame co-partitioned with the edges, meeting them in the
+  closure-cogroup envelope :func:`closure_cogroup`
+  (``cogroup(...).applyInArrow``, shared with the distributed Temporal
+  PageRank fold) — nothing driver-held, right for unbounded node spaces.
+
+Without a closure key the broadcast adapter falls back to a single task
+(still ~4x faster than the per-edge ``fold`` because all work is
+vectorized).  Hub actors skew *within* a component; they cost O(1) per
+edge here (prefix sums are oblivious to degree), which is the kernel's
+answer to the north rule's hub-skew clause.
 """
 
 from __future__ import annotations
 
 import math
+import time
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+from pyspark import TaskContext
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -258,6 +268,221 @@ def walk_totals(
     return total, r, resid, diverged
 
 
+def order_edges(key, seq, src, dst):
+    """A group's edges in stable ``(key, seq)`` order.
+
+    The sort is skipped only for input already in that order: a
+    key-monotone check alone would miss seq disorder at timestamp ties,
+    silently applying tied chained edges out of the reference's stable
+    seq order."""
+    dk = np.diff(key)
+    if np.any((dk < 0) | ((dk == 0) & (np.diff(seq) < 0))):
+        order = np.lexsort((seq, key))
+        return key[order], src[order], dst[order]
+    return key, src, dst
+
+
+def encode_nodes(*ids: np.ndarray):
+    """Local node encoding of a group: a dense range slice when the ids
+    are packed (the common chain-closed layout), else sort-unique.
+
+    Returns ``(nodes, [local index array per input array])``."""
+    all_ids = np.concatenate(ids)
+    n_lo = int(all_ids.min())
+    n_hi = int(all_ids.max())
+    if n_hi - n_lo + 1 <= 2 * len(all_ids) + 64:
+        nodes = np.arange(n_lo, n_hi + 1, dtype=np.int64)
+        return nodes, [a - n_lo for a in ids]
+    nodes = np.unique(all_ids)
+    return nodes, [np.searchsorted(nodes, a) for a in ids]
+
+
+def group_meta(rounds, residual, edges, diverged, t0, t1) -> np.ndarray:
+    """The 7-float per-group metrics vector (see :func:`decode_meta`):
+    ``t0`` is the group's start, ``t1`` the end of its input decoding."""
+    tc = TaskContext.get()
+    pid = tc.partitionId() if tc is not None else -1
+    return np.array(
+        [
+            float(pid),
+            rounds,
+            residual,
+            float(edges),
+            1.0 if diverged else 0.0,
+            t1 - t0,
+            time.time() - t1,
+        ]
+    )
+
+
+def decode_meta(b: bytes) -> dict:
+    v = np.frombuffer(b, np.float64)
+    return dict(
+        partition=int(v[0]),
+        rounds=float(v[1]),
+        residual=float(v[2]),
+        edges=int(v[3]),
+        diverged=bool(v[4]),
+        t_input=float(v[5]),
+        t_compute=float(v[6]),
+    )
+
+
+def walk_group(
+    key: np.ndarray,
+    src: np.ndarray,
+    dst: np.ndarray,
+    nodes: np.ndarray,
+    y0loc: np.ndarray,
+    y0_active: np.ndarray,
+    betas: np.ndarray,
+    weighters: list[Weighter],
+    chunk_plan: list[tuple[float, list[tuple[int, float, float]]]],
+    t0: float,
+    tol: float = 1e-12,
+    block_size: int = 8192,
+    layers: int = 1,
+):
+    """The group kernel: advance one chain-closed edge group over the
+    WHOLE batch of decay chunks in one pass.
+
+    ``key/src/dst`` are the group's edges in ``(key, seq)`` order with
+    ``src/dst`` local indices into ``nodes``; ``y0loc`` ``(nl, p_rows)``
+    is the carried state in the basis of the first chunk end (rebased in
+    place), ``y0_active`` marks the nodes that carry state.
+
+    ``chunk_plan``: ordered ``(chunk_end, [(iid, hi, rt), ...])`` decay
+    chunks (:func:`plan_decay_chunks`).  Because groups are chain-closed,
+    no cross-task synchronization is needed between chunks — each group
+    rebases its local carry to the next chunk basis itself (one vector
+    multiply), so a replay of any number of snapshots costs ONE Spark
+    job.
+
+    ``layers`` > 1 runs the TRUNCATED variant: layer ``l`` reads only
+    layer ``l-1`` (``temporal_katz_computer.py:104-117``), so the state
+    is ``layers * p`` rows (layer-major) and each block needs exactly
+    ``layers`` prefix-sum passes — no convergence iteration at all.
+
+    Returns ``(frames, meta)``: ``frames`` lists ``(kind, interval,
+    nodes, vals (m, p_rows))`` — one read-out (kind 0) per interval,
+    then the end state (kind 1) in the basis of the last chunk end —
+    and ``meta`` is the :func:`group_meta` vector.
+    """
+    p = len(betas)
+    p_rows = layers * p
+    nl = len(nodes)
+    # Blocked execution: rounds stream over cache-resident edge blocks
+    # instead of the whole group (which hits the DRAM-bandwidth wall at
+    # high core counts). Exact because temporal walks never go
+    # backward in time: blocks are processed in time order and a
+    # per-node CARRY of fully-converged earlier-block totals feeds
+    # each block's round-1 injection. Read-out boundaries are block
+    # cuts, so the carry at a cut IS the read-out accumulator.
+    carry = np.zeros((nl, p_rows))
+    touched = np.zeros(nl, dtype=bool)
+    frames = []
+    rounds_sum = edges_sum = 0
+    resid_max = 0.0
+    diverged_any = False
+    basis = float(chunk_plan[0][0])
+    pos_lo = 0
+    t1 = time.time()
+    for t_end, ivs in chunk_plan:
+        t_end = float(t_end)
+        if t_end != basis:
+            # local rebase to the new chunk basis (lazy decay carry)
+            for r in range(p_rows):
+                fac = weighters[r % p].weight(t_end - basis)
+                carry[:, r] *= fac
+                y0loc[:, r] *= fac
+            basis = t_end
+        hi_cut = int(np.searchsorted(key, t_end, side="right"))
+        iv_cuts = [
+            int(np.searchsorted(key, float(hi), side="right")) for _, hi, _ in ivs
+        ]
+        block_starts = sorted(
+            set(range(pos_lo, hi_cut, block_size)) | set(iv_cuts) | {pos_lo, hi_cut}
+        )
+        iv_ptr = 0
+
+        def emit_readouts_upto(pos):
+            # every boundary cut is a block cut, so equality hits
+            nonlocal iv_ptr
+            while iv_ptr < len(ivs) and iv_cuts[iv_ptr] <= pos:
+                iid, hi, rt = ivs[iv_ptr]
+                mask = touched | y0_active
+                if mask.any():
+                    scores = carry[mask] + y0loc[mask]  # basis t_end
+                    for r in range(p_rows):
+                        scores[:, r] /= weighters[r % p].weight(t_end - float(rt))
+                    frames.append((0, iid, nodes[mask], scores))
+                iv_ptr += 1
+
+        emit_readouts_upto(pos_lo)
+        for s, e in zip(block_starts[:-1], block_starts[1:]):
+            if e > s:
+                bsrc = src[s:e]
+                bdst = dst[s:e]
+                B = e - s
+                edge_flat, pred_flat, views, flat_size = build_walk_layout(bsrc, bdst)
+                base_in = y0loc + carry  # (nl, p_rows)
+                if layers == 1:
+                    w_inject = np.empty((p, B))
+                    for j in range(p):
+                        w_inject[j] = betas[j] * (
+                            base_in[bsrc, j] + weighters[j].weight_np(t_end - key[s:e])
+                        )
+                    totals, rounds, resid, diverged = walk_totals(
+                        w_inject, betas, edge_flat, pred_flat, views, flat_size, tol=tol
+                    )
+                else:
+                    # truncated: layer l reads only layer l-1 ->
+                    # exactly `layers` prefix passes, no iteration
+                    totals = np.empty((p_rows, B))
+                    FB = np.zeros(flat_size + 1)
+                    for j in range(p):
+                        wv = weighters[j].weight_np(t_end - key[s:e])
+                        totals[j] = betas[j] * wv
+                        for l in range(1, layers):
+                            FB.fill(0.0)
+                            FB[edge_flat] = totals[(l - 1) * p + j]
+                            for off, rws, width in views:
+                                if width == 1:
+                                    continue
+                                view = FB[off : off + rws * width].reshape(rws, width)
+                                np.cumsum(view, axis=1, out=view)
+                            totals[l * p + j] = betas[j] * (
+                                wv + base_in[bsrc, (l - 1) * p + j] + FB[pred_flat]
+                            )
+                    # layered path has no per-round isfinite check:
+                    # verify the block's totals so an overflowing
+                    # parameterization raises like the iterative path
+                    rounds, resid = layers, 0.0
+                    diverged = not np.isfinite(totals).all()
+                np.add.at(carry, bdst, np.ascontiguousarray(totals.T))
+                touched[bsrc] = True
+                touched[bdst] = True
+                rounds_sum += rounds * B
+                edges_sum += B
+                resid_max = max(resid_max, resid)
+                diverged_any = diverged_any or diverged
+            emit_readouts_upto(e)
+        pos_lo = hi_cut
+    end = touched | y0_active
+    if end.any():
+        frames.append((1, -1, nodes[end], carry[end] + y0loc[end]))
+    mean_rounds = rounds_sum / edges_sum if edges_sum else 0.0
+    meta = group_meta(mean_rounds, resid_max, len(key), diverged_any, t0, t1)
+    return frames, meta
+
+
+#: raised (with the diverged groups' metrics) by both walk state paths
+OVERFLOW_MSG = (
+    "temporal-walk scores overflowed float64 (unbounded dynamics "
+    "for these (beta, weighter) params)"
+)
+
+
 def make_walk_kernel(
     betas: np.ndarray,
     weighters: list[Weighter],
@@ -270,8 +495,10 @@ def make_walk_kernel(
     key_lo: float | None = None,
     layers: int = 1,
 ):
-    """Arrow grouped kernel: one task = one (or more) chain-closed edge
-    groups, advanced over the WHOLE batch in one pass.
+    """Broadcast-state adapter of :func:`walk_group`: a ``mapInPandas``
+    kernel whose task holds one (or more) chain-closed edge groups and
+    gathers its carried state from the ``(p_rows, n)`` broadcast
+    ``y0_bcast`` (basis of the first chunk end).
 
     ``edge_transform`` (optional) maps the task's raw input frame to the
     edge frame ``(key, src, dst, seq)`` INSIDE the kernel — fusing edge
@@ -280,31 +507,13 @@ def make_walk_kernel(
     task, which oversubscribes cores at high parallelism). The key-range
     cut is applied here when a transform is used.
 
-    ``chunk_plan``: ordered ``(chunk_end, [(iid, hi, rt), ...])`` decay
-    chunks (:func:`plan_decay_chunks`).  Because tasks are chain-closed,
-    no cross-task synchronization is needed between chunks — each task
-    rebases its local carry to the next chunk basis itself (one vector
-    multiply), so a replay of any number of snapshots costs ONE Spark
-    job.  ``y0_bcast`` must be in the basis of the first chunk end.
-
-    ``layers`` > 1 runs the TRUNCATED variant: layer ``l`` reads only
-    layer ``l-1`` (``temporal_katz_computer.py:104-117``), so the state
-    is ``layers * p`` rows (layer-major) and each block needs exactly
-    ``layers`` prefix-sum passes — no convergence iteration at all.
-
     Emits one packed binary row per (kind, interval): node ids as int64
     bytes and the (m, rows) score matrix as float64 bytes — collected
     via Arrow and decoded with ``np.frombuffer`` on the driver.
     """
-    p = len(betas)
-    p_rows = layers * p
 
     def kernel(batches):
-        import time as _t
-
-        from pyspark import TaskContext
-
-        t_k0 = _t.time()
+        t0 = time.time()
         pdfs = [b for b in batches if len(b)]
         if not pdfs:
             return
@@ -327,173 +536,23 @@ def make_walk_kernel(
                 gdst = gdst[keep]
         if len(key) == 0:
             return
-        # skip the sort only for input already sorted by (key, seq): a
-        # key-monotone check alone would miss seq disorder at timestamp
-        # ties, silently applying tied chained edges out of the
-        # reference's stable seq order
-        dk = np.diff(key)
-        if np.any((dk < 0) | ((dk == 0) & (np.diff(seq) < 0))):
-            order = np.lexsort((seq, key))
-            key = key[order]
-            gsrc = gsrc[order]
-            gdst = gdst[order]
-        E = len(key)
-        # local node encoding: dense range slice when the task's node ids
-        # are packed (the common chain-closed layout), else sort-unique
-        n_lo = int(min(gsrc.min(), gdst.min()))
-        n_hi = int(max(gsrc.max(), gdst.max()))
-        if n_hi - n_lo + 1 <= 2 * E + 64:
-            nodes = np.arange(n_lo, n_hi + 1, dtype=np.int64)
-            src = gsrc - n_lo
-            dst = gdst - n_lo
-        else:
-            nodes = np.unique(np.concatenate([gsrc, gdst]))
-            src = np.searchsorted(nodes, gsrc)
-            dst = np.searchsorted(nodes, gdst)
-        nl = len(nodes)
-        ever = np.zeros(nl, dtype=bool)
+        key, gsrc, gdst = order_edges(key, seq, gsrc, gdst)
+        nodes, (src, dst) = encode_nodes(gsrc, gdst)
+        ever = np.zeros(len(nodes), dtype=bool)
         ever[src] = True
         ever[dst] = True
         y0loc = np.ascontiguousarray(y0_bcast.value[:, nodes].T)  # (nl, p_rows)
+        # y0-active nodes with no edge in the task are the driver's to
+        # fill (they are NOT in the read-outs or the end-state)
         y0_active = active_bcast.value[nodes] & ever
-        # Blocked execution: rounds stream over cache-resident edge blocks
-        # instead of the whole task (which hits the DRAM-bandwidth wall at
-        # high core counts). Exact because temporal walks never go
-        # backward in time: blocks are processed in time order and a
-        # per-node CARRY of fully-converged earlier-block totals feeds
-        # each block's round-1 injection. Read-out boundaries are block
-        # cuts, so the carry at a cut IS the read-out accumulator.
-        carry = np.zeros((nl, p_rows))
-        touched = np.zeros(nl, dtype=bool)
-        rows = []
-        rounds_sum = edges_sum = 0
-        resid_max = 0.0
-        diverged_any = False
-        basis = chunk_plan[0][0]
-        pos_lo = 0
-        t_k1 = _t.time()
-        for t_end, ivs in chunk_plan:
-            t_end = float(t_end)
-            if t_end != basis:
-                # local rebase to the new chunk basis (lazy decay carry)
-                for r in range(p_rows):
-                    fac = weighters[r % p].weight(t_end - basis)
-                    carry[:, r] *= fac
-                    y0loc[:, r] *= fac
-                basis = t_end
-            hi_cut = int(np.searchsorted(key, t_end, side="right"))
-            iv_cuts = [
-                int(np.searchsorted(key, float(hi), side="right"))
-                for _, hi, _ in ivs
-            ]
-            block_starts = sorted(
-                set(range(pos_lo, hi_cut, block_size))
-                | set(iv_cuts)
-                | {pos_lo, hi_cut}
-            )
-            iv_ptr = 0
-
-            def emit_readouts_upto(pos):
-                # every boundary cut is a block cut, so equality hits
-                nonlocal iv_ptr
-                while iv_ptr < len(ivs) and iv_cuts[iv_ptr] <= pos:
-                    iid, hi, rt = ivs[iv_ptr]
-                    # y0-active nodes with no edge in the batch are the
-                    # driver's to fill (they are NOT in the end-state)
-                    mask = touched | y0_active
-                    if mask.any():
-                        scores = carry[mask] + y0loc[mask]  # basis t_end
-                        for r in range(p_rows):
-                            scores[:, r] /= weighters[r % p].weight(
-                                t_end - float(rt)
-                            )
-                        rows.append(
-                            (
-                                0,
-                                iid,
-                                nodes[mask].tobytes(),
-                                np.ascontiguousarray(scores).tobytes(),
-                            )
-                        )
-                    iv_ptr += 1
-
-            emit_readouts_upto(pos_lo)
-            for s, e in zip(block_starts[:-1], block_starts[1:]):
-                if e > s:
-                    bsrc = src[s:e]
-                    bdst = dst[s:e]
-                    B = e - s
-                    edge_flat, pred_flat, views, flat_size = (
-                        build_walk_layout(bsrc, bdst)
-                    )
-                    base_in = y0loc + carry  # (nl, p_rows)
-                    if layers == 1:
-                        w_inject = np.empty((p, B))
-                        for j in range(p):
-                            w_inject[j] = betas[j] * (
-                                base_in[bsrc, j]
-                                + weighters[j].weight_np(t_end - key[s:e])
-                            )
-                        totals, rounds, resid, diverged = walk_totals(
-                            w_inject, betas, edge_flat, pred_flat, views,
-                            flat_size, tol=tol,
-                        )
-                    else:
-                        # truncated: layer l reads only layer l-1 ->
-                        # exactly `layers` prefix passes, no iteration
-                        totals = np.empty((p_rows, B))
-                        FB = np.zeros(flat_size + 1)
-                        for j in range(p):
-                            wv = weighters[j].weight_np(t_end - key[s:e])
-                            totals[j] = betas[j] * wv
-                            for l in range(1, layers):
-                                prev = totals[(l - 1) * p + j]
-                                FB.fill(0.0)
-                                FB[edge_flat] = prev
-                                for off, rws, width in views:
-                                    if width == 1:
-                                        continue
-                                    view = FB[off : off + rws * width].reshape(
-                                        rws, width
-                                    )
-                                    np.cumsum(view, axis=1, out=view)
-                                totals[l * p + j] = betas[j] * (
-                                    wv
-                                    + base_in[bsrc, (l - 1) * p + j]
-                                    + FB[pred_flat]
-                                )
-                        # layered path has no per-round isfinite check:
-                        # verify the block's totals so an overflowing
-                        # parameterization raises like the iterative path
-                        rounds, resid = layers, 0.0
-                        diverged = not np.isfinite(totals).all()
-                    np.add.at(carry, bdst, np.ascontiguousarray(totals.T))
-                    touched[bsrc] = True
-                    touched[bdst] = True
-                    rounds_sum += rounds * B
-                    edges_sum += B
-                    resid_max = max(resid_max, resid)
-                    diverged_any = diverged_any or diverged
-                emit_readouts_upto(e)
-            pos_lo = hi_cut
-        y_end = carry[ever] + y0loc[ever]  # (nl, p), basis = last chunk end
-        rows.append(
-            (1, -1, nodes[ever].tobytes(), np.ascontiguousarray(y_end).tobytes())
+        frames, meta = walk_group(
+            key, src, dst, nodes, y0loc, y0_active, betas, weighters,
+            chunk_plan, t0, tol=tol, block_size=block_size, layers=layers,
         )
-        tc = TaskContext.get()
-        pid = tc.partitionId() if tc is not None else -1
-        mean_rounds = rounds_sum / edges_sum if edges_sum else 0.0
-        meta = np.array(
-            [
-                float(pid),
-                mean_rounds,
-                resid_max,
-                float(E),
-                1.0 if diverged_any else 0.0,
-                t_k1 - t_k0,
-                _t.time() - t_k1,
-            ]
-        )
+        rows = [
+            (kind, iid, n.tobytes(), np.ascontiguousarray(v).tobytes())
+            for kind, iid, n, v in frames
+        ]
         rows.append((2, -1, b"", meta.tobytes()))
         yield pd.DataFrame(rows, columns=["kind", "interval", "nodes", "vals"])
 
@@ -508,7 +567,7 @@ def run_walk_batch(
     y0_active: np.ndarray,
     chunk_plan: list[tuple[float, list[tuple[int, float, float]]]],
     lo: float | None,
-    closure_partitions: int | None,
+    partitions: int | None,
     closure_col: str | None,
     tol: float = 1e-12,
     block_size: int = 8192,
@@ -531,6 +590,7 @@ def run_walk_batch(
     sc = spark.sparkContext
     t_last = float(chunk_plan[-1][0])
     p = layers * len(betas)
+    nparts = partitions or sc.defaultParallelism
     if edge_transform is not None:
         if closure_col not in (None, "preserve"):
             raise ValueError(
@@ -541,34 +601,21 @@ def run_walk_batch(
         cond = F.col("key") <= F.lit(t_last)
         if lo is not None:
             cond = cond & (F.col("key") > F.lit(float(lo)))
+        sel = df.select("key", "src", "dst", "seq").filter(cond)
         if closure_col is None:
             # no chain-closure key: exact only as a single ordered task
-            sel = df.select("key", "src", "dst", "seq").filter(cond).coalesce(1)
-        elif closure_col == "preserve":
-            # caller guarantees the df's partitioning is node-disjoint
-            sel = df.select("key", "src", "dst", "seq").filter(cond)
+            sel = sel.coalesce(1)
         elif closure_col == "components":
-            # derive the closure key: weakly connected components of the
-            # time-collapsed graph (walks cannot leave a WCC), computed
-            # with the engine's own CC operator — zero-config exact
-            # distribution for multi-component graphs
-            from .components import connected_components
+            # derive the closure key in-engine: walks cannot leave a
+            # weakly connected component of the time-collapsed graph
+            from .temporal_katz_distributed import attach_closure_components
 
-            base = df.filter(cond)
-            cc = connected_components(base.select("src", "dst"))
-            nparts = closure_partitions or sc.defaultParallelism
-            sel = (
-                base.join(
-                    cc.withColumnRenamed("node_id", "src").withColumnRenamed(
-                        "component", "_closure"
-                    ),
-                    "src",
-                )
-                .repartition(nparts, "_closure")
-                .select("key", "src", "dst", "seq")
+            sel = attach_closure_components(sel, nparts).select(
+                "key", "src", "dst", "seq"
             )
-        else:
-            nparts = closure_partitions or sc.defaultParallelism
+        elif closure_col != "preserve":
+            # a node-disjoint closure column ('preserve' keeps the df's
+            # partitioning, which the caller guarantees node-disjoint)
             sel = (
                 df.filter(cond)
                 .repartition(nparts, closure_col)
@@ -607,24 +654,10 @@ def run_walk_batch(
             es_nodes.append(np.frombuffer(nb, np.int64))
             es_vals.append(np.frombuffer(vb, np.float64).reshape(-1, p))
         else:
-            v = np.frombuffer(vb, np.float64)
-            metrics.append(
-                dict(
-                    partition=int(v[0]),
-                    rounds=float(v[1]),
-                    residual=float(v[2]),
-                    edges=int(v[3]),
-                    diverged=bool(v[4]),
-                    t_input=float(v[5]),
-                    t_rounds=float(v[6]),
-                )
-            )
+            metrics.append(decode_meta(vb))
     diverged = [m for m in metrics if m["diverged"]]
     if diverged:
-        raise ValueError(
-            "temporal-walk scores overflowed float64 (unbounded dynamics "
-            f"for these (beta, weighter) params): {diverged[:3]}"
-        )
+        raise ValueError(f"{OVERFLOW_MSG}: {diverged[:3]}")
     readouts = {
         iid: (np.concatenate(ro_nodes[iid]), np.concatenate(ro_vals[iid]))
         for iid in ro_nodes
@@ -640,6 +673,16 @@ def run_walk_batch(
 # Fully distributed state: nothing driver-held, nothing broadcast.
 # ---------------------------------------------------------------------------
 
+#: carried state of the closure-cogroup measures (``vals`` is the node's
+#: state row: ``layers * p`` walk scores, or TPR's ``[pr..., m...]``)
+STATE_SCHEMA = T.StructType(
+    [
+        T.StructField("node", T.LongType(), False),
+        T.StructField("closure", T.LongType(), False),
+        T.StructField("vals", T.ArrayType(T.DoubleType()), False),
+    ]
+)
+
 DIST_ROW_SCHEMA = T.StructType(
     [
         T.StructField("kind", T.IntegerType(), False),  # 0 readout, 1 state, 2 metrics
@@ -651,6 +694,133 @@ DIST_ROW_SCHEMA = T.StructType(
     ]
 )
 
+_ARROW_ROW_SCHEMA = pa.schema(
+    [
+        ("kind", pa.int32()),
+        ("interval", pa.int64()),
+        ("node", pa.int64()),
+        ("closure", pa.int64()),
+        ("vals", pa.list_(pa.float64())),
+        ("meta", pa.binary()),
+    ]
+)
+
+
+def read_group(key_tuple, etbl, stbl):
+    """Decode one cogroup call's Arrow inputs into ``(closure, key, src,
+    dst, snodes, svals)``: edges in stable ``(key, seq)`` order, state
+    node ids and their ``(n_state, width)`` state rows; None for a
+    group with neither edges nor state."""
+
+    def col(tbl, name, dtype):
+        if not tbl.num_rows:
+            return np.empty(0, dtype)
+        arr = tbl.column(name).to_numpy(zero_copy_only=False)
+        return arr.astype(dtype, copy=False)
+
+    key = col(etbl, "key", np.float64)
+    snodes = col(stbl, "node", np.int64)
+    if not len(key) and not len(snodes):
+        return None
+    k0 = key_tuple[0]
+    closure = int(k0.as_py() if hasattr(k0, "as_py") else k0)
+    key, src, dst = order_edges(
+        key, col(etbl, "seq", np.int64), col(etbl, "src", np.int64),
+        col(etbl, "dst", np.int64),
+    )
+    svals = None
+    if len(snodes):
+        flat = stbl.column("vals").combine_chunks().flatten()
+        svals = flat.to_numpy(zero_copy_only=False).reshape(len(snodes), -1)
+    return closure, key, src, dst, snodes, svals
+
+
+def pack_group(closure: int, frames: list, meta: np.ndarray) -> pa.Table:
+    """One group's output table: the rows of every ``(kind, interval,
+    nodes, vals)`` frame (``vals`` widths may differ per frame) and a
+    final metrics row with null ``vals`` and the ``meta`` bytes."""
+    counts = [len(f[2]) for f in frames] + [1]
+    m = sum(counts) - 1
+    widths = np.array([f[3].shape[1] for f in frames], np.int64)
+    offsets = np.zeros(m + 1, np.int64)
+    np.cumsum(np.repeat(widths, counts[:-1]), out=offsets[1:])
+    flat = np.concatenate([np.ravel(f[3]) for f in frames] + [np.empty(0)])
+    vals = pa.concat_arrays(
+        [
+            pa.ListArray.from_arrays(
+                pa.array(offsets.astype(np.int32), pa.int32()),
+                pa.array(flat, pa.float64()),
+            ),
+            pa.array([None], pa.list_(pa.float64())),
+        ]
+    )
+    kinds = np.array([f[0] for f in frames] + [2], np.int32)
+    ivs = np.array([f[1] for f in frames] + [-1], np.int64)
+    nodes = [f[2] for f in frames] + [np.array([-1], np.int64)]
+    return pa.table(
+        {
+            "kind": pa.array(np.repeat(kinds, counts), pa.int32()),
+            "interval": pa.array(np.repeat(ivs, counts), pa.int64()),
+            "node": pa.array(np.concatenate(nodes), pa.int64()),
+            "closure": pa.array(np.full(m + 1, closure, np.int64), pa.int64()),
+            "vals": vals,
+            "meta": pa.array([None] * m + [meta.tobytes()], pa.binary()),
+        }
+    )
+
+
+def closure_cogroup(
+    edges: DataFrame,
+    closure_col: str,
+    t_last: float,
+    state_in: DataFrame | None,
+    group_fn,
+) -> DataFrame:
+    """The closure-cogroup envelope shared by the distributed-state
+    measures: ``groupBy(closure).cogroup(...).applyInArrow`` of the edges
+    with ``key <= t_last`` and the carried ``STATE_SCHEMA`` frame.
+
+    Each call decodes its group (:func:`read_group`), runs
+    ``group_fn(key, src, dst, snodes, svals, t0) -> (frames, meta)`` and
+    packs the result (:func:`pack_group`) into ``DIST_ROW_SCHEMA`` rows:
+    kind 0 read-outs, kind 1 next state, kind 2 metrics.  pyarrow
+    Tables go in and out — no pandas materialization on either side
+    (the row count here is the whole edge stream).
+    """
+    e = edges.select(
+        F.col("key").cast("double").alias("key"),
+        "src",
+        "dst",
+        "seq",
+        F.col(closure_col).cast("long").alias("closure"),
+    ).filter(F.col("key") <= F.lit(t_last))
+    if state_in is None:
+        state_in = edges.sparkSession.createDataFrame([], STATE_SCHEMA)
+    srows = state_in.select(
+        "node", F.col("closure").cast("long").alias("closure"), "vals"
+    )
+
+    def kernel(key_tuple, etbl, stbl):
+        t0 = time.time()
+        group = read_group(key_tuple, etbl, stbl)
+        if group is None:
+            return _ARROW_ROW_SCHEMA.empty_table()
+        closure, *arrays = group
+        frames, meta = group_fn(*arrays, t0)
+        return pack_group(closure, frames, meta)
+
+    return (
+        e.groupBy("closure")
+        .cogroup(srows.groupBy("closure"))
+        .applyInArrow(kernel, schema=DIST_ROW_SCHEMA)
+    )
+
+
+def group_metrics(out: DataFrame) -> list[dict]:
+    """Collect and decode the per-group metrics rows (kind 2) of a
+    closure-cogroup job output."""
+    return [decode_meta(r["meta"]) for r in out.filter(F.col("kind") == 2).collect()]
+
 
 def run_walk_batch_distributed(
     edges: DataFrame,
@@ -660,7 +830,6 @@ def run_walk_batch_distributed(
     closure_col: str,
     state_in: DataFrame | None = None,
     state_basis: float | None = None,
-    closure_partitions: int | None = None,
     tol: float = 1e-12,
     block_size: int = 8192,
     layers: int = 1,
@@ -671,319 +840,113 @@ def run_walk_batch_distributed(
 
     State is a DataFrame ``(node, closure, vals: array<double>)`` in the
     basis ``state_basis`` (the previous batch's last chunk end); edges
-    carry a node-disjoint ``closure_col``. The two sides meet via
-    ``groupBy(closure).cogroup(...).applyInPandas`` — Spark's native
-    two-sided grouped map, so the state rows reach exactly their group's
-    kernel call without widening the edge schema (a nullable state
-    column on every edge row makes Arrow->pandas object conversion the
-    bottleneck).  Each group rebases/advances/reads out its own nodes —
-    a group with carried state but no edges this batch is pure decay and
-    still emits every read-out.  The job output IS the product: tidy
-    read-out rows plus the next state frame; the driver touches only the
-    per-task metrics.
+    carry a node-disjoint ``closure_col``. The two sides meet in
+    :func:`closure_cogroup` (``groupBy(closure).cogroup(...)
+    .applyInArrow``) — Spark's native two-sided grouped map, so the
+    state rows reach exactly their group's kernel call without widening
+    the edge schema.  Each group rebases its carried state to the first
+    chunk basis and runs :func:`walk_group` — a group with carried state
+    but no edges this batch is pure decay and still emits every
+    read-out.  The job output IS the product: tidy read-out rows plus
+    the next state frame; the driver touches only the per-group metrics.
+    The cogroup's task count follows ``spark.sql.shuffle.partitions``
+    (plus AQE coalescing).
 
-    Returns ``(out_df, metrics_extractor)``: persist/write ``out_df``
-    and split on ``kind`` (0 = read-out ``(interval, node, vals)``,
-    1 = next-state ``(node, closure, vals)``);
-    ``metrics_extractor(out_df)`` collects the per-group convergence
-    rows (small).
-
-    ``closure_partitions`` is advisory only: the cogroup's task count
-    follows ``spark.sql.shuffle.partitions`` (plus AQE coalescing) —
-    size that to the cluster; the parameter is kept for signature
-    parity with :func:`run_walk_batch`.
+    Returns ``(out_df, group_metrics)``: persist/write ``out_df`` and
+    split on ``kind`` (0 = read-out ``(interval, node, vals)``, 1 =
+    next-state ``(node, closure, vals)``); ``group_metrics(out_df)``
+    collects the per-group convergence rows (small).
     """
-    spark = edges.sparkSession
     p = len(betas)
     p_rows = layers * p
-    t_last = float(chunk_plan[-1][0])
-    e = edges.select(
-        F.col("key").cast("double").alias("key"),
-        "src",
-        "dst",
-        "seq",
-        F.col(closure_col).cast("long").alias("closure"),
-    ).filter(F.col("key") <= F.lit(t_last))
-    if state_in is None:
-        state_in = spark.createDataFrame(
-            [],
-            T.StructType(
-                [
-                    T.StructField("node", T.LongType(), False),
-                    T.StructField("closure", T.LongType(), False),
-                    T.StructField("vals", T.ArrayType(T.DoubleType()), False),
-                ]
-            ),
-        )
-    srows = state_in.select(
-        "node", F.col("closure").cast("long").alias("closure"), "vals"
-    )
-    sb = float(state_basis) if state_basis is not None else float(chunk_plan[0][0])
+    basis = float(chunk_plan[0][0])
+    sb = float(state_basis) if state_basis is not None else basis
 
-    def kernel(key_tuple, etbl, stbl):
-        # applyInArrow kernel: pyarrow Tables in and out — no pandas
-        # DataFrame materialization on either side (the row count here
-        # is the whole edge stream)
-        import time as _t
-
-        import pyarrow as pa
-
-        from pyspark import TaskContext
-
-        t_k0 = _t.time()
-        closure_val = int(key_tuple[0].as_py() if hasattr(key_tuple[0], "as_py") else key_tuple[0])
-        E0 = etbl.num_rows
-
-        def col(tbl, name, dtype):
-            return tbl.column(name).to_numpy(zero_copy_only=False).astype(dtype, copy=False)
-
-        key = col(etbl, "key", np.float64) if E0 else np.empty(0, np.float64)
-        seq = col(etbl, "seq", np.int64) if E0 else np.empty(0, np.int64)
-        gsrc = col(etbl, "src", np.int64) if E0 else np.empty(0, np.int64)
-        gdst = col(etbl, "dst", np.int64) if E0 else np.empty(0, np.int64)
-        if len(key):
-            dk = np.diff(key)
-            # lexicographic (key, seq) disorder check — see the note in
-            # make_walk_kernel: key-only misses seq disorder at ties
-            if np.any((dk < 0) | ((dk == 0) & (np.diff(seq) < 0))):
-                order = np.lexsort((seq, key))
-                key = key[order]
-                gsrc = gsrc[order]
-                gdst = gdst[order]
-        E = len(key)
-        n_state = stbl.num_rows
-        snodes = (
-            col(stbl, "node", np.int64) if n_state else np.empty(0, np.int64)
-        )
-        all_ids = np.concatenate([gsrc, gdst, snodes])
-        if len(all_ids) == 0:
-            return pa.table(
-                {
-                    "kind": pa.array([], pa.int32()),
-                    "interval": pa.array([], pa.int64()),
-                    "node": pa.array([], pa.int64()),
-                    "closure": pa.array([], pa.int64()),
-                    "vals": pa.array([], pa.list_(pa.float64())),
-                    "meta": pa.array([], pa.binary()),
-                }
-            )
-        n_lo = int(all_ids.min())
-        n_hi = int(all_ids.max())
-        if n_hi - n_lo + 1 <= 2 * len(all_ids) + 64:
-            nodes = np.arange(n_lo, n_hi + 1, dtype=np.int64)
-            enc = lambda a: a - n_lo  # noqa: E731
-        else:
-            nodes = np.unique(all_ids)
-            enc = lambda a: np.searchsorted(nodes, a)  # noqa: E731
-        nl = len(nodes)
-        src = enc(gsrc)
-        dst = enc(gdst)
-        sidx = enc(snodes)
-        y0loc = np.zeros((nl, p_rows))
-        if n_state:
-            vals_col = stbl.column("vals").combine_chunks()
-            flat = vals_col.flatten().to_numpy(zero_copy_only=False)
-            y0loc[sidx] = flat.reshape(n_state, p_rows)
-        y0_active = np.zeros(nl, dtype=bool)
+    def advance(key, gsrc, gdst, snodes, svals, t0):
+        nodes, (src, dst, sidx) = encode_nodes(gsrc, gdst, snodes)
+        y0loc = np.zeros((len(nodes), p_rows))
+        if len(snodes):
+            y0loc[sidx] = svals
+        y0_active = np.zeros(len(nodes), dtype=bool)
         y0_active[sidx] = True
         # rebase carried state to the first chunk basis
-        basis = float(chunk_plan[0][0])
         if sb != basis:
             for r in range(p_rows):
                 y0loc[:, r] *= weighters[r % p].weight(basis - sb)
-        carry = np.zeros((nl, p_rows))
-        touched = np.zeros(nl, dtype=bool)
-        # columnar accumulators -> ONE DataFrame per group at the end
-        # (per-row tuples and per-emit frames both dominated the kernel
-        # at many groups x many read-out boundaries)
-        acc_kind: list[np.ndarray] = []
-        acc_iv: list[np.ndarray] = []
-        acc_node: list[np.ndarray] = []
-        acc_vals: list[np.ndarray] = []
-
-        def emit_frame(kind, iid, out_nodes, out_scores):
-            m = len(out_nodes)
-            acc_kind.append(np.full(m, kind, np.int32))
-            acc_iv.append(np.full(m, iid, np.int64))
-            acc_node.append(out_nodes)
-            acc_vals.append(np.ascontiguousarray(out_scores))
-
-        rounds_sum = edges_sum = 0
-        resid_max = 0.0
-        diverged_any = False
-        pos_lo = 0
-        t_k1 = _t.time()
-        for t_end, ivs in chunk_plan:
-            t_end = float(t_end)
-            if t_end != basis:
-                for r in range(p_rows):
-                    fac = weighters[r % p].weight(t_end - basis)
-                    carry[:, r] *= fac
-                    y0loc[:, r] *= fac
-                basis = t_end
-            hi_cut = int(np.searchsorted(key, t_end, side="right")) if E else 0
-            iv_cuts = [
-                int(np.searchsorted(key, float(hi), side="right")) if E else 0
-                for _, hi, _ in ivs
-            ]
-            block_starts = sorted(
-                set(range(pos_lo, hi_cut, block_size))
-                | set(iv_cuts)
-                | {pos_lo, hi_cut}
-            )
-            iv_ptr = 0
-
-            def emit_readouts_upto(pos):
-                nonlocal iv_ptr
-                while iv_ptr < len(ivs) and iv_cuts[iv_ptr] <= pos:
-                    iid, hi, rt = ivs[iv_ptr]
-                    mask = touched | y0_active
-                    if mask.any():
-                        scores = carry[mask] + y0loc[mask]
-                        for r in range(p_rows):
-                            scores[:, r] /= weighters[r % p].weight(
-                                t_end - float(rt)
-                            )
-                        emit_frame(0, iid, nodes[mask], scores)
-                    iv_ptr += 1
-
-            emit_readouts_upto(pos_lo)
-            for s, en in zip(block_starts[:-1], block_starts[1:]):
-                if en > s:
-                    bsrc = src[s:en]
-                    bdst = dst[s:en]
-                    B = en - s
-                    edge_flat, pred_flat, views, flat_size = (
-                        build_walk_layout(bsrc, bdst)
-                    )
-                    base_in = y0loc + carry
-                    if layers == 1:
-                        w_inject = np.empty((p, B))
-                        for j in range(p):
-                            w_inject[j] = betas[j] * (
-                                base_in[bsrc, j]
-                                + weighters[j].weight_np(t_end - key[s:en])
-                            )
-                        totals, rounds, resid, diverged = walk_totals(
-                            w_inject, betas, edge_flat, pred_flat, views,
-                            flat_size, tol=tol,
-                        )
-                    else:
-                        totals = np.empty((p_rows, B))
-                        FB = np.zeros(flat_size + 1)
-                        for j in range(p):
-                            wv = weighters[j].weight_np(t_end - key[s:en])
-                            totals[j] = betas[j] * wv
-                            for l in range(1, layers):
-                                prev = totals[(l - 1) * p + j]
-                                FB.fill(0.0)
-                                FB[edge_flat] = prev
-                                for off, rws, width in views:
-                                    if width == 1:
-                                        continue
-                                    view = FB[
-                                        off : off + rws * width
-                                    ].reshape(rws, width)
-                                    np.cumsum(view, axis=1, out=view)
-                                totals[l * p + j] = betas[j] * (
-                                    wv
-                                    + base_in[bsrc, (l - 1) * p + j]
-                                    + FB[pred_flat]
-                                )
-                        # layered path has no per-round isfinite check:
-                        # verify the block's totals so an overflowing
-                        # parameterization raises like the iterative path
-                        rounds, resid = layers, 0.0
-                        diverged = not np.isfinite(totals).all()
-                    np.add.at(carry, bdst, np.ascontiguousarray(totals.T))
-                    touched[bsrc] = True
-                    touched[bdst] = True
-                    rounds_sum += rounds * B
-                    edges_sum += B
-                    resid_max = max(resid_max, resid)
-                    diverged_any = diverged_any or diverged
-                emit_readouts_upto(en)
-            pos_lo = hi_cut
-        out_mask = touched | y0_active
-        y_end = carry[out_mask] + y0loc[out_mask]
-        if out_mask.any():
-            emit_frame(1, -1, nodes[out_mask], y_end)
-        tc = TaskContext.get()
-        pid = tc.partitionId() if tc is not None else -1
-        mean_rounds = rounds_sum / edges_sum if edges_sum else 0.0
-        meta = np.array(
-            [
-                float(pid),
-                mean_rounds,
-                resid_max,
-                float(E),
-                1.0 if diverged_any else 0.0,
-                t_k1 - t_k0,
-                _t.time() - t_k1,
-            ]
-        )
-        if acc_kind:
-            kind_col = np.concatenate(acc_kind)
-            iv_col = np.concatenate(acc_iv)
-            node_col = np.concatenate(acc_node)
-            vals_mat = np.concatenate(acc_vals, axis=0)
-        else:
-            kind_col = np.empty(0, np.int32)
-            iv_col = np.empty(0, np.int64)
-            node_col = np.empty(0, np.int64)
-            vals_mat = np.empty((0, p_rows))
-        m = len(kind_col)
-        # vals as one zero-copy ListArray (uniform row width p_rows);
-        # the final metrics row carries a null vals + binary meta
-        offsets = pa.array(
-            np.arange(0, (m + 1) * p_rows, p_rows, dtype=np.int32), pa.int32()
-        )
-        vals_body = pa.ListArray.from_arrays(
-            offsets, pa.array(vals_mat.ravel(), pa.float64())
-        )
-        vals_arr = pa.concat_arrays(
-            [vals_body, pa.array([None], pa.list_(pa.float64()))]
-        )
-        return pa.table(
-            {
-                "kind": pa.array(
-                    np.concatenate([kind_col, np.array([2], np.int32)]), pa.int32()
-                ),
-                "interval": pa.array(
-                    np.concatenate([iv_col, np.array([-1], np.int64)]), pa.int64()
-                ),
-                "node": pa.array(
-                    np.concatenate([node_col, np.array([-1], np.int64)]), pa.int64()
-                ),
-                "closure": pa.array(
-                    np.full(m + 1, closure_val, np.int64), pa.int64()
-                ),
-                "vals": vals_arr,
-                "meta": pa.array([None] * m + [meta.tobytes()], pa.binary()),
-            }
+        return walk_group(
+            key, src, dst, nodes, y0loc, y0_active, betas, weighters,
+            chunk_plan, t0, tol=tol, block_size=block_size, layers=layers,
         )
 
-    out = (
-        e.groupBy("closure")
-        .cogroup(srows.groupBy("closure"))
-        .applyInArrow(kernel, schema=DIST_ROW_SCHEMA)
+    out = closure_cogroup(
+        edges, closure_col, float(chunk_plan[-1][0]), state_in, advance
     )
+    return out, group_metrics
 
-    def metrics_extractor(out_df):
-        mets = []
-        for row in out_df.filter(F.col("kind") == 2).collect():
-            v = np.frombuffer(row["meta"], np.float64)
-            mets.append(
-                dict(
-                    partition=int(v[0]),
-                    rounds=float(v[1]),
-                    residual=float(v[2]),
-                    edges=int(v[3]),
-                    diverged=bool(v[4]),
-                    t_input=float(v[5]) if len(v) > 5 else 0.0,
-                    t_compute=float(v[6]) if len(v) > 6 else 0.0,
-                )
-            )
-        return mets
 
-    return out, metrics_extractor
+class ClosureStateMeasure:
+    """Driver-protocol tail shared by the closure-cogroup measures
+    (``distributed = True``: ``run_batch`` returns a tidy read-out
+    DataFrame ``(interval_id, param_id, node_id, score)`` for the
+    :class:`~..plans.superstep.SuperstepDriver`'s partitioned write, and
+    the state is a checkpointed DataFrame).  Subclasses set ``state``,
+    ``param_ids``, ``walk_metrics`` and ``_diverged_msg``."""
+
+    distributed = True
+    _out_cached: DataFrame | None = None
+
+    def can_batch(self) -> bool:
+        return True
+
+    def superstep(self, window: DataFrame | None, hi: float) -> None:
+        if window is None:
+            # an inactive interval is a no-op: decay is lazy (the next
+            # batch rebases across the whole gap) and TPR has none
+            return
+        self.run_batch(window, [(0, float(hi), float(hi))], readouts=False)
+
+    def _advance(
+        self,
+        out: DataFrame,
+        readouts: bool,
+        extra: dict | None = None,
+        positive_only: bool = False,
+    ) -> DataFrame | None:
+        """Persist the job output ``out`` once, collect its per-group
+        metrics (one action runs the cogroup job), raise on divergence,
+        cut the next state from it with an eager localCheckpoint (bounds
+        lineage across batches) and return the read-out frame, which
+        reads from the same cache (None with ``readouts=False``)."""
+        self.release()
+        out = self._out_cached = out.persist()
+        self.walk_metrics = [dict(extra or {}, **m) for m in group_metrics(out)]
+        bad = [m for m in self.walk_metrics if m["diverged"]]
+        if bad:
+            raise ValueError(f"{self._diverged_msg}: {bad[:3]}")
+        self.state = (
+            out.filter(F.col("kind") == 1)
+            .select("node", "closure", "vals")
+            .localCheckpoint(eager=True)
+        )
+        if not readouts:
+            return None
+        ro = out.filter(F.col("kind") == 0).select(
+            F.col("interval").alias("interval_id"),
+            F.col("node").alias("node_id"),
+            F.posexplode("vals").alias("pos", "score"),
+        )
+        if positive_only:
+            ro = ro.filter(F.col("score") > 0)
+        pid_arr = F.array(*[F.lit(p) for p in self.param_ids])
+        return ro.select(
+            "interval_id",
+            pid_arr[F.col("pos")].alias("param_id"),
+            "node_id",
+            "score",
+        )
+
+    def release(self) -> None:
+        """Drop the cached job output (bench hygiene / end of replay)."""
+        if self._out_cached is not None:
+            self._out_cached.unpersist()
+            self._out_cached = None

@@ -147,8 +147,13 @@ def test_walk_components_layout(spark):
 
 def test_walk_divergence_guard(spark):
     """Unbounded dynamics (beta=1, negligible decay, dense chains) raise,
-    on the explicit walk path and on the default path, which resolves to
-    walk for factorizing weighters."""
+    on the explicit walk path, on the default path, which resolves to
+    walk for factorizing weighters, and on the distributed-state
+    measure (one closure group)."""
+    from pyspark.sql import functions as F
+
+    from online_centrality_spark.operators import DistributedTemporalKatz
+
     E, n = 4000, 3
     t = np.linspace(0, 10.0, E)
     rng = np.random.default_rng(0)
@@ -157,10 +162,13 @@ def test_walk_divergence_guard(spark):
     stream = list(zip(t.tolist(), src.tolist(), dst.tolist()))
     params = [(1.0, ExponentialWeighter(norm=1e9, base=0.5))]
     df = _edges_df(spark, stream)
-    for path in ("walk", "auto"):
-        tk = TemporalKatz(params, n, path=path)
+    dtk = DistributedTemporalKatz(params)
+    runs = [(TemporalKatz(params, n, path=path), df) for path in ("walk", "auto")]
+    runs.append((dtk, df.withColumn("closure", F.lit(0))))
+    for tk, tk_df in runs:
         with pytest.raises(ValueError, match="overflowed"):
-            tk.run_batch(df, [(0, 10.0, 10.0)])
+            tk.run_batch(tk_df, [(0, 10.0, 10.0)])
+    dtk.release()
 
     assert TemporalKatz(params, n).path == "walk"
     for w in (
@@ -298,7 +306,6 @@ def test_walk_distributed_state_matches_driver_state(spark):
             closure_col="grp",
             state_in=state,
             state_basis=basis,
-            closure_partitions=4,
         )
         out = out.persist()
         assert not any(m["diverged"] for m in metx(out))

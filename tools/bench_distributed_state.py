@@ -83,8 +83,7 @@ def main():
 
     def run():
         out, metx = run_walk_batch_distributed(
-            edges, betas, ws, plan, closure_col="grp",
-            closure_partitions=cpus * 2,
+            edges, betas, ws, plan, closure_col="grp"
         )
         out = out.persist()
         n_ro = out.filter(F.col("kind") == 0).count()
