@@ -8747,6 +8747,7 @@ GROUP BY 1
     sqls["feature_hashing"] = f"""
 WITH feats AS (
   SELECT user_id, 'event_type:' || event_type AS f FROM events
+  WHERE event_type IS NOT NULL
   UNION ALL
   SELECT user_id,
          'k:' || CAST(CAST(json_extract(props, '$.k') AS BIGINT)

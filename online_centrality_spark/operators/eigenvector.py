@@ -105,11 +105,9 @@ def _ev_distributed(sym: DataFrame, max_iter: int, salt: int = 1) -> DataFrame:
     nodes = sym.select(F.col("src").alias("node_id")).distinct().persist()
     v = nodes.withColumn("score", F.lit(1.0))
     for _ in range(max_iter):
-        sc = v.select("node_id", "score")
-        joined = (
-            salted_join(sym, sc, key="src", salt=salt, dim_key="node_id")
-            if salt > 1
-            else sym.join(sc, sym["src"] == sc["node_id"]).drop("node_id")
+        joined = salted_join(
+            sym, v.select("node_id", "score"), key="src", salt=salt,
+            dim_key="node_id",
         )
         raw = joined.groupBy(F.col("dst").alias("node_id")).agg(
             F.sum("score").alias("score")

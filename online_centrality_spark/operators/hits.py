@@ -128,12 +128,12 @@ def _hits_distributed(
     )
 
     def _lookup(scores: DataFrame, key: str, col: str) -> DataFrame:
-        """dedup ⋈ scores on ``key`` — hub rows fan out, so salt > 1
+        """dedup ⋈ scores on ``key`` — hub rows fan out, so a salt above 1
         spreads each hot key over ``salt`` reducers deterministically."""
-        sc = scores.select("node_id", col)
-        if salt > 1:
-            return salted_join(dedup, sc, key=key, salt=salt, dim_key="node_id")
-        return dedup.join(sc, dedup[key] == sc["node_id"]).drop("node_id")
+        return salted_join(
+            dedup, scores.select("node_id", col), key=key, salt=salt,
+            dim_key="node_id",
+        )
 
     def _normalize(raw: DataFrame, col: str) -> DataFrame:
         tot = raw.agg(F.sum(col)).collect()[0][0] or 0.0

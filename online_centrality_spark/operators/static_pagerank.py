@@ -2,20 +2,36 @@
 
 The reference delegates to ``nx.pagerank(G, alpha, max_iter)``
 (``static_pagerank_computer.py:42``) on the dedup digraph. networkx's
-documented power iteration: uniform start and teleport, out-degree-
-normalized push, dangling mass redistributed uniformly, stop when the L1
-change < N * tol (tol = 1e-6), raise if ``max_iter`` is exhausted. We
-reproduce that exactly so per-vertex scores match to allclose(1e-6).
+documented power iteration: out-weight-normalized push, teleport and
+dangling mass to the personalization vector (uniform by default), stop
+when the L1 change < N * tol (tol = 1e-6), raise if ``max_iter`` is
+exhausted. We reproduce that exactly so per-vertex scores match to
+allclose(1e-6).
+
+Every public function here runs ONE power-iteration step and differs
+only in its inputs: the push weight ``w`` of each edge and the teleport
+set ``T`` (every node for plain and weighted PageRank, the seeds for
+personalized PageRank). With ``W(u)`` the total out-weight of ``u``
+(its out-degree when ``w = 1``) and ``D`` the rank held by dangling
+nodes (``W = 0``)::
+
+    x'[v] = alpha * sum_{u->v} x[u] * w(u, v) / W(u)
+            + (alpha * D + 1 - alpha) * [v in T] / |T|
+
+so teleport AND dangling mass land uniformly on ``T``, which is also the
+start vector.
 
 Two physical strategies behind one logical operator:
 
 - **distributed** (default for big graphs): ranks live in a DataFrame;
-  each iteration is one shuffle — ``edges join ranks on src`` then
-  ``groupBy(dst).sum`` (map-side partial agg absorbs hub skew; AQE
-  re-splits skewed reducers). Lineage is cut every iteration with
-  ``localCheckpoint`` so plans stay O(1); convergence is one tiny agg.
+  each round is one push join (hub-salted when ``salt`` > 1,
+  functions/skew.py) + ``groupBy(dst).sum`` (map-side partial agg absorbs
+  hub skew; AQE re-splits skewed reducers), a lazy ``localCheckpoint``
+  that keeps plans O(1), and exactly ONE driver collect: the round's L1
+  change, max change and the next round's dangling mass in one
+  aggregate, which also materializes the checkpoint.
 
-- **compact** (node count below ``collect_threshold``): the whole graph
+- **compact** (node count at most ``collect_threshold``): the whole graph
   ships through one Arrow task and iterates in numpy — the right plan
   when the graph is a per-snapshot window over a small actor dictionary
   (a 100-iteration loop of Spark jobs over 10 nodes is the wrong plan).
@@ -29,9 +45,52 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..functions.skew import salted_join
+
 
 class PageRankDiverged(RuntimeError):
     pass
+
+
+_NO_SEED = "personalized_pagerank: no seed is a graph node"
+
+_PR_SCHEMA = T.StructType(
+    [
+        T.StructField("node_id", T.LongType(), False),
+        T.StructField("score", T.DoubleType(), False),
+    ]
+)
+
+
+def _power_numpy(src, dst, w, seeds, alpha, max_iter, tol, strict, what):
+    """The numpy kernel of the step: (node ids sorted, ranks) for push
+    weights ``w`` and teleport set ``seeds`` (None = every node)."""
+    nodes = np.unique(np.concatenate([src, dst]))
+    n = len(nodes)
+    if n == 0:
+        return nodes, np.array([])
+    s = np.searchsorted(nodes, src)
+    d = np.searchsorted(nodes, dst)
+    ind = np.ones(n) if seeds is None else np.isin(nodes, seeds) * 1.0
+    k = ind.sum()
+    if k == 0:
+        raise ValueError(_NO_SEED)
+    wout = np.bincount(s, weights=w, minlength=n)
+    dangling = wout == 0
+    safe_out = np.where(wout > 0, wout, 1.0)
+    x = ind / k
+    for _ in range(max_iter):
+        xlast = x
+        share = alpha * xlast / safe_out
+        x = np.bincount(d, weights=share[s] * w, minlength=n)
+        x += (alpha * xlast[dangling].sum() + (1.0 - alpha)) * ind / k
+        if np.abs(x - xlast).sum() < n * tol:
+            return nodes, x
+    if strict:
+        raise PageRankDiverged(
+            f"{what} failed to converge in {max_iter} iterations"
+        )
+    return nodes, x  # fixed-iteration mode (strict=False)
 
 
 def pagerank_numpy(
@@ -44,41 +103,142 @@ def pagerank_numpy(
 ) -> tuple[np.ndarray, np.ndarray]:
     """networkx-parity power iteration on dedup edge arrays.
 
-    Returns (node_ids sorted, ranks). Shared by the compact path and the
-    evaluation oracle-style batch computations.
+    Returns (node_ids sorted, ranks); the compact path's kernel with
+    unit weights and every node in the teleport set.
     """
-    nodes = np.unique(np.concatenate([src, dst]))
-    n = len(nodes)
-    if n == 0:
-        return nodes, np.array([])
-    idx = {v: i for i, v in enumerate(nodes)}
-    s = np.array([idx[v] for v in src])
-    d = np.array([idx[v] for v in dst])
-    outdeg = np.bincount(s, minlength=n)
-    dangling = outdeg == 0
-    x = np.full(n, 1.0 / n)
-    safe_out = np.where(outdeg > 0, outdeg, 1)
-    for _ in range(max_iter):
-        xlast = x
-        share = alpha * xlast / safe_out
-        x = np.bincount(d, weights=share[s], minlength=n)
-        danglesum = alpha * xlast[dangling].sum()
-        x += (danglesum + (1.0 - alpha)) / n
-        if np.abs(x - xlast).sum() < n * tol:
-            return nodes, x
+    return _power_numpy(
+        src, dst, np.ones(len(src)), None, alpha, max_iter, tol, strict,
+        "pagerank",
+    )
+
+
+def _compact(g: DataFrame, seeds, alpha, max_iter, tol, strict, what):
+    seed_vals = (
+        None
+        if seeds is None
+        else np.array([r[0] for r in seeds.collect()], dtype=np.int64)
+    )
+
+    def kernel(batches):
+        chunks = [pdf for pdf in batches if len(pdf)]
+        if not chunks:
+            return
+        pdf = pd.concat(chunks, ignore_index=True)
+        nodes, ranks = _power_numpy(
+            pdf["src"].to_numpy(np.int64),
+            pdf["dst"].to_numpy(np.int64),
+            pdf["w"].to_numpy(np.float64),
+            seed_vals, alpha, max_iter, tol, strict, what,
+        )
+        yield pd.DataFrame({"node_id": nodes.astype(np.int64), "score": ranks})
+
+    return g.coalesce(1).mapInPandas(kernel, schema=_PR_SCHEMA)
+
+
+def _distributed(g: DataFrame, n: int, seeds, alpha, max_iter, tol, strict,
+                 salt, what):
+    """The distributed loop: (ranks, [(round, l1_delta, max_delta)])."""
+    g = g.persist()
+    nodes = (
+        g.select(F.col("src").alias("node_id"))
+        .unionAll(g.select(F.col("dst").alias("node_id")))
+        .distinct()
+    )
+    # teleport indicator: every node, or seeds ∩ nodes. The seed frame is
+    # user-supplied and typically tiny — but NO broadcast hint: AQE
+    # broadcasts small sides on its own, and a corpus-sized seed set
+    # must be allowed to shuffle (the prepare_training_data lesson).
+    tele = (
+        nodes.withColumn("ind", F.lit(1.0))
+        if seeds is None
+        else nodes.join(seeds.withColumn("ind", F.lit(1.0)), "node_id", "left")
+    )
+    wout = g.groupBy(F.col("src").alias("node_id")).agg(F.sum("w").alias("wout"))
+    base = tele.join(wout, "node_id", "left").fillna(0.0, ["wout", "ind"]).persist()
+    k, dangle_tele = base.agg(
+        F.sum("ind"), F.sum(F.when(F.col("wout") == 0, F.col("ind")))
+    ).collect()[0]
+    if not k:
+        raise ValueError(_NO_SEED)
+    # start uniform over the teleport set: the first dangling mass is a
+    # closed form of the same aggregate, not a job
+    dangle = (dangle_tele or 0.0) / k
+    ranks = base.select("node_id", "wout", (F.col("ind") / F.lit(k)).alias("rank"))
+    rows = []
+    for i in range(1, max_iter + 1):
+        push = (
+            salted_join(g, ranks, key="src", salt=salt, dim_key="node_id")
+            .groupBy(F.col("dst").alias("node_id"))
+            .agg(F.sum(F.col("rank") * F.col("w") / F.col("wout")).alias("contrib"))
+        )
+        c = alpha * dangle + (1.0 - alpha)
+        new_ranks = (
+            base.join(push, "node_id", "left")
+            .select(
+                "node_id",
+                "wout",
+                (
+                    F.lit(alpha) * F.coalesce(F.col("contrib"), F.lit(0.0))
+                    + F.lit(c) * F.col("ind") / F.lit(k)
+                ).alias("rank"),
+            )
+            # lazy: the stats collect below is the materializing action,
+            # so each round costs ONE job
+            .localCheckpoint(eager=False)
+        )
+        delta = F.abs(F.col("rank") - F.col("old"))
+        l1, mx, dangle = (
+            new_ranks.join(
+                ranks.select("node_id", F.col("rank").alias("old")), "node_id"
+            )
+            .agg(
+                F.sum(delta),
+                F.max(delta),
+                F.sum(F.when(F.col("wout") == 0, F.col("rank"))),
+            )
+            .collect()[0]
+        )
+        rows.append((i, float(l1), float(mx)))
+        dangle = float(dangle or 0.0)
+        ranks = new_ranks
+        if l1 < n * tol:
+            return ranks, rows
     if strict:
         raise PageRankDiverged(
-            f"pagerank failed to converge in {max_iter} iterations"
+            f"{what} failed to converge in {max_iter} iterations"
         )
-    return nodes, x  # fixed-iteration mode (strict=False)
+    return ranks, rows
 
 
-_PR_SCHEMA = T.StructType(
-    [
-        T.StructField("node_id", T.LongType(), False),
-        T.StructField("score", T.DoubleType(), False),
-    ]
-)
+def _pagerank(g: DataFrame, seeds, alpha, max_iter, tol, strict,
+              collect_threshold, salt, what):
+    """Shared prologue over ``g = (src, dst, w)``, one row per pair:
+    node count, empty-graph return, compact-or-distributed choice.
+    Returns (scores, per-round rows); rows are empty off the
+    distributed path."""
+    n = (
+        g.select(F.col("src").alias("n"))
+        .unionAll(g.select(F.col("dst").alias("n")))
+        .distinct()
+        .count()
+    )
+    if n == 0:
+        return g.sparkSession.createDataFrame([], _PR_SCHEMA), []
+    if n <= collect_threshold:
+        return _compact(g, seeds, alpha, max_iter, tol, strict, what), []
+    ranks, rows = _distributed(
+        g, n, seeds, alpha, max_iter, tol, strict, salt, what
+    )
+    return ranks.select("node_id", F.col("rank").alias("score")), rows
+
+
+def _dedup(edges: DataFrame) -> DataFrame:
+    """The dedup digraph with unit push weights."""
+    return (
+        edges.select("src", "dst")
+        .dropDuplicates(["src", "dst"])
+        .withColumn("w", F.lit(1.0))
+    )
 
 
 def static_pagerank(
@@ -95,153 +255,10 @@ def static_pagerank(
     ``salt`` > 1 applies explicit hub salting to the per-iteration
     contribution join (functions/skew.py) in the distributed path.
     """
-    dedup = edges.select("src", "dst").dropDuplicates(["src", "dst"])
-    n_nodes = (
-        dedup.select(F.col("src").alias("n"))
-        .unionAll(dedup.select(F.col("dst").alias("n")))
-        .distinct()
-        .count()
-    )
-    if n_nodes == 0:
-        return edges.sparkSession.createDataFrame([], _PR_SCHEMA)
-    if n_nodes <= collect_threshold:
-        return _pagerank_compact(dedup, alpha, max_iter, tol, strict)
-    return _pagerank_distributed(
-        dedup, n_nodes, alpha, max_iter, tol, strict, salt=salt
-    )
-
-
-def _pagerank_compact(dedup: DataFrame, alpha, max_iter, tol, strict=True) -> DataFrame:
-    def kernel(batches):
-        chunks = [pdf for pdf in batches if len(pdf)]
-        if not chunks:
-            return
-        pdf = pd.concat(chunks, ignore_index=True)
-        nodes, ranks = pagerank_numpy(
-            pdf["src"].to_numpy(np.int64),
-            pdf["dst"].to_numpy(np.int64),
-            alpha,
-            max_iter,
-            tol,
-            strict,
-        )
-        yield pd.DataFrame({"node_id": nodes.astype(np.int64), "score": ranks})
-
-    return dedup.coalesce(1).mapInPandas(kernel, schema=_PR_SCHEMA)
-
-
-def _pagerank_distributed(
-    dedup: DataFrame, n_nodes: int, alpha, max_iter, tol, strict=True,
-    salt: int = 1,
-) -> DataFrame:
-    spark = dedup.sparkSession
-    dedup = dedup.persist()
-    nodes = (
-        dedup.select(F.col("src").alias("node_id"))
-        .unionAll(dedup.select(F.col("dst").alias("node_id")))
-        .distinct()
-        .persist()
-    )
-    outdeg = dedup.groupBy(F.col("src").alias("node_id")).agg(
-        F.count("*").alias("outdeg")
-    )
-    # node table with outdeg (0 for dangling) reused every iteration
-    base = nodes.join(outdeg, "node_id", "left").fillna(0, subset=["outdeg"]).persist()
-    ranks = base.select("node_id", "outdeg", F.lit(1.0 / n_nodes).alias("rank"))
-    ranks = ranks.localCheckpoint(eager=True)
-    from ..functions.skew import salted_join
-
-    for _ in range(max_iter):
-        # hub-src skew: the per-node rank row fans out to every out-edge
-        # of a hub; salt > 1 spreads a hub's edges over `salt` reducers
-        # deterministically (functions/skew.py), on top of AQE skew-join
-        joined = salted_join(
-            dedup, ranks.select("node_id", "outdeg", "rank"),
-            key="src", salt=salt, dim_key="node_id",
-        ) if salt > 1 else dedup.join(
-            ranks, dedup["src"] == ranks["node_id"]
-        )
-        push = (
-            joined.groupBy(F.col("dst").alias("node_id"))
-            .agg(F.sum(F.col("rank") / F.col("outdeg")).alias("contrib"))
-        )
-        danglesum = (
-            ranks.filter(F.col("outdeg") == 0).agg(F.sum("rank")).collect()[0][0]
-            or 0.0
-        )
-        uniform = (alpha * danglesum + (1.0 - alpha)) / n_nodes
-        new_ranks = (
-            base.join(push, "node_id", "left")
-            .select(
-                "node_id",
-                "outdeg",
-                (
-                    F.lit(alpha) * F.coalesce(F.col("contrib"), F.lit(0.0))
-                    + F.lit(uniform)
-                ).alias("rank"),
-            )
-            .localCheckpoint(eager=True)
-        )
-        err = (
-            new_ranks.select("node_id", "rank")
-            .join(
-                ranks.select("node_id", F.col("rank").alias("old")),
-                "node_id",
-            )
-            .agg(F.sum(F.abs(F.col("rank") - F.col("old"))))
-            .collect()[0][0]
-        )
-        ranks = new_ranks
-        if err < n_nodes * tol:
-            return ranks.select("node_id", F.col("rank").alias("score"))
-    if strict:
-        raise PageRankDiverged(
-            f"pagerank failed to converge in {max_iter} iterations"
-        )
-    return ranks.select("node_id", F.col("rank").alias("score"))
-
-
-def ppr_numpy(
-    src: np.ndarray,
-    dst: np.ndarray,
-    seeds: np.ndarray,
-    alpha: float = 0.85,
-    max_iter: int = 100,
-    tol: float = 1e-6,
-    strict: bool = True,
-) -> tuple[np.ndarray, np.ndarray]:
-    """Personalized PageRank kernel: teleport AND dangling mass go to the
-    uniform distribution over ``seeds`` (networkx's documented default —
-    dangling defaults to the personalization vector)."""
-    nodes = np.unique(np.concatenate([src, dst]))
-    n = len(nodes)
-    if n == 0:
-        return nodes, np.array([])
-    idx = {v: i for i, v in enumerate(nodes)}
-    s = np.array([idx[v] for v in src])
-    d = np.array([idx[v] for v in dst])
-    seed_idx = np.array(sorted({idx[v] for v in seeds if v in idx}), dtype=np.int64)
-    if len(seed_idx) == 0:
-        raise ValueError("personalized_pagerank: no seed is a graph node")
-    p = np.zeros(n)
-    p[seed_idx] = 1.0 / len(seed_idx)
-    outdeg = np.bincount(s, minlength=n)
-    dangling = outdeg == 0
-    safe_out = np.where(outdeg > 0, outdeg, 1)
-    x = p.copy()
-    for _ in range(max_iter):
-        xlast = x
-        share = alpha * xlast / safe_out
-        x = np.bincount(d, weights=share[s], minlength=n)
-        danglesum = alpha * xlast[dangling].sum()
-        x += (danglesum + (1.0 - alpha)) * p
-        if np.abs(x - xlast).sum() < n * tol:
-            return nodes, x
-    if strict:
-        raise PageRankDiverged(
-            f"personalized pagerank failed to converge in {max_iter} iterations"
-        )
-    return nodes, x
+    return _pagerank(
+        _dedup(edges), None, alpha, max_iter, tol, strict,
+        collect_threshold, salt, "pagerank",
+    )[0]
 
 
 def personalized_pagerank(
@@ -258,135 +275,15 @@ def personalized_pagerank(
     (a 1-column DataFrame of node ids; rows not in the graph are
     ignored; uniform restart over the rest).
 
-    Same two physical strategies as :func:`static_pagerank`; the
-    distributed path differs from plain PageRank only in the teleport
-    term, which scatters onto the (usually tiny, broadcastable) seed
-    frame instead of uniformly — the per-iteration shuffle shape is
-    identical, so every skew/lineage note there applies here.
+    The teleport set is the seeds, which also receive the dangling mass
+    (networkx's documented default — dangling defaults to the
+    personalization vector); everything else is :func:`static_pagerank`.
     """
-    dedup = edges.select("src", "dst").dropDuplicates(["src", "dst"])
-    n_nodes = (
-        dedup.select(F.col("src").alias("n"))
-        .unionAll(dedup.select(F.col("dst").alias("n")))
-        .distinct()
-        .count()
-    )
-    if n_nodes == 0:
-        return edges.sparkSession.createDataFrame([], _PR_SCHEMA)
-    seed_col = seeds.columns[0]
-    seed_df = seeds.select(F.col(seed_col).alias("node_id")).distinct()
-    if n_nodes <= collect_threshold:
-        seed_vals = np.array(
-            [r["node_id"] for r in seed_df.collect()], dtype=np.int64
-        )
-
-        def kernel(batches):
-            chunks = [pdf for pdf in batches if len(pdf)]
-            if not chunks:
-                return
-            pdf = pd.concat(chunks, ignore_index=True)
-            nodes, ranks = ppr_numpy(
-                pdf["src"].to_numpy(np.int64),
-                pdf["dst"].to_numpy(np.int64),
-                seed_vals,
-                alpha,
-                max_iter,
-                tol,
-                strict,
-            )
-            yield pd.DataFrame({"node_id": nodes.astype(np.int64), "score": ranks})
-
-        return dedup.coalesce(1).mapInPandas(kernel, schema=_PR_SCHEMA)
-    return _ppr_distributed(
-        dedup, seed_df, alpha, max_iter, tol, strict, salt=salt
-    )
-
-
-def _ppr_distributed(
-    dedup: DataFrame, seed_df: DataFrame, alpha, max_iter, tol, strict,
-    salt: int = 1,
-) -> DataFrame:
-    from ..functions.skew import salted_join
-
-    dedup = dedup.persist()
-    nodes = (
-        dedup.select(F.col("src").alias("node_id"))
-        .unionAll(dedup.select(F.col("dst").alias("node_id")))
-        .distinct()
-        .persist()
-    )
-    # restart distribution: uniform over seeds ∩ nodes. The seed frame is
-    # user-supplied and typically tiny — but NO broadcast hint: AQE
-    # broadcasts small sides on its own, and a corpus-sized seed set
-    # must be allowed to shuffle (the prepare_training_data lesson).
-    seeds_in = seed_df.join(nodes, "node_id", "left_semi")
-    n_seeds = seeds_in.count()
-    if n_seeds == 0:
-        raise ValueError("personalized_pagerank: no seed is a graph node")
-    p = (
-        nodes.join(seeds_in.withColumn("_s", F.lit(1)), "node_id", "left")
-        .select(
-            "node_id",
-            F.when(F.col("_s").isNotNull(), 1.0 / n_seeds)
-            .otherwise(0.0)
-            .alias("p"),
-        )
-        .persist()
-    )
-    outdeg = dedup.groupBy(F.col("src").alias("node_id")).agg(
-        F.count("*").alias("outdeg")
-    )
-    base = (
-        p.join(outdeg, "node_id", "left").fillna(0, subset=["outdeg"]).persist()
-    )
-    ranks = base.select("node_id", "outdeg", F.col("p").alias("rank"))
-    ranks = ranks.localCheckpoint(eager=True)
-    n_nodes = nodes.count()
-    for _ in range(max_iter):
-        joined = salted_join(
-            dedup, ranks.select("node_id", "outdeg", "rank"),
-            key="src", salt=salt, dim_key="node_id",
-        ) if salt > 1 else dedup.join(
-            ranks, dedup["src"] == ranks["node_id"]
-        )
-        push = (
-            joined.groupBy(F.col("dst").alias("node_id"))
-            .agg(F.sum(F.col("rank") / F.col("outdeg")).alias("contrib"))
-        )
-        danglesum = (
-            ranks.filter(F.col("outdeg") == 0).agg(F.sum("rank")).collect()[0][0]
-            or 0.0
-        )
-        scale = alpha * danglesum + (1.0 - alpha)
-        new_ranks = (
-            base.join(push, "node_id", "left")
-            .select(
-                "node_id",
-                "outdeg",
-                (
-                    F.lit(alpha) * F.coalesce(F.col("contrib"), F.lit(0.0))
-                    + F.lit(scale) * F.col("p")
-                ).alias("rank"),
-            )
-            .localCheckpoint(eager=True)
-        )
-        err = (
-            new_ranks.select("node_id", "rank")
-            .join(
-                ranks.select("node_id", F.col("rank").alias("old")),
-                "node_id",
-            )
-            .agg(F.sum(F.abs(F.col("rank") - F.col("old"))))
-            .collect()[0][0]
-        )
-        ranks = new_ranks
-        if err < n_nodes * tol:
-            return ranks.select("node_id", F.col("rank").alias("score"))
-    if strict:
-        raise PageRankDiverged(
-            f"personalized pagerank failed to converge in {max_iter} iterations"
-        )
-    return ranks.select("node_id", F.col("rank").alias("score"))
+    seed_df = seeds.select(F.col(seeds.columns[0]).alias("node_id")).distinct()
+    return _pagerank(
+        _dedup(edges), seed_df, alpha, max_iter, tol, strict,
+        collect_threshold, salt, "personalized pagerank",
+    )[0]
 
 
 def weighted_pagerank(
@@ -401,161 +298,21 @@ def weighted_pagerank(
     """(node_id, score) — PageRank with weight-proportional transitions.
 
     networkx-parity semantics for a weighted digraph (``nx.pagerank``
-    with ``weight=``): input is ``(src, dst, w)`` with one row per pair
-    (pre-aggregated multiplicities); the push step sends
-    ``rank * w / W_src`` along each edge where ``W_src`` is the source's
-    total out-weight, dangling mass (``W_src = 0``) redistributes
-    uniformly, teleport is uniform. With all weights equal this reduces
-    exactly to :func:`static_pagerank`.
-
-    Physical strategy mirrors :func:`static_pagerank`: single-task numpy
-    kernel under ``collect_threshold`` nodes, else one salted shuffle
-    join + map-side-combined groupBy per iteration with
-    ``localCheckpoint`` lineage cuts.
+    with ``weight=``): input is ``(src, dst, w)``; multiplicities of a
+    pair are summed; the push step sends ``rank * w / W_src`` along each
+    edge where ``W_src`` is the source's total out-weight, dangling mass
+    (``W_src = 0``) redistributes uniformly, teleport is uniform. With
+    all weights equal this reduces exactly to :func:`static_pagerank`.
     """
     w = (
         wedges.select("src", "dst", F.col("w").cast("double").alias("w"))
         .groupBy("src", "dst")
         .agg(F.sum("w").alias("w"))
     )
-    n_nodes = (
-        w.select(F.col("src").alias("n"))
-        .unionAll(w.select(F.col("dst").alias("n")))
-        .distinct()
-        .count()
-    )
-    if n_nodes == 0:
-        return wedges.sparkSession.createDataFrame([], _PR_SCHEMA)
-    if n_nodes <= collect_threshold:
-
-        def kernel(batches):
-            chunks = [pdf for pdf in batches if len(pdf)]
-            if not chunks:
-                return
-            pdf = pd.concat(chunks, ignore_index=True)
-            nodes, ranks = weighted_pagerank_numpy(
-                pdf["src"].to_numpy(np.int64),
-                pdf["dst"].to_numpy(np.int64),
-                pdf["w"].to_numpy(np.float64),
-                alpha,
-                max_iter,
-                tol,
-                strict,
-            )
-            yield pd.DataFrame(
-                {"node_id": nodes.astype(np.int64), "score": ranks}
-            )
-
-        return w.coalesce(1).mapInPandas(kernel, schema=_PR_SCHEMA)
-    return _weighted_pagerank_distributed(
-        w, n_nodes, alpha, max_iter, tol, strict, salt=salt
-    )
-
-
-def weighted_pagerank_numpy(
-    src: np.ndarray,
-    dst: np.ndarray,
-    w: np.ndarray,
-    alpha: float = 0.85,
-    max_iter: int = 100,
-    tol: float = 1e-6,
-    strict: bool = True,
-) -> tuple[np.ndarray, np.ndarray]:
-    nodes = np.unique(np.concatenate([src, dst]))
-    n = len(nodes)
-    if n == 0:
-        return nodes, np.array([])
-    idx = {v: i for i, v in enumerate(nodes)}
-    s = np.array([idx[v] for v in src])
-    d = np.array([idx[v] for v in dst])
-    wout = np.bincount(s, weights=w, minlength=n)
-    dangling = wout == 0
-    safe_out = np.where(wout > 0, wout, 1.0)
-    x = np.full(n, 1.0 / n)
-    for _ in range(max_iter):
-        xlast = x
-        share = alpha * xlast / safe_out
-        x = np.bincount(d, weights=share[s] * w, minlength=n)
-        danglesum = alpha * xlast[dangling].sum()
-        x += (danglesum + (1.0 - alpha)) / n
-        if np.abs(x - xlast).sum() < n * tol:
-            return nodes, x
-    if strict:
-        raise PageRankDiverged(
-            f"weighted pagerank failed to converge in {max_iter} iterations"
-        )
-    return nodes, x
-
-
-def _weighted_pagerank_distributed(
-    w: DataFrame, n_nodes: int, alpha, max_iter, tol, strict=True, salt: int = 1
-) -> DataFrame:
-    from ..functions.skew import salted_join
-
-    w = w.persist()
-    nodes = (
-        w.select(F.col("src").alias("node_id"))
-        .unionAll(w.select(F.col("dst").alias("node_id")))
-        .distinct()
-        .persist()
-    )
-    wout = w.groupBy(F.col("src").alias("node_id")).agg(
-        F.sum("w").alias("wout")
-    )
-    base = nodes.join(wout, "node_id", "left").fillna(0.0, ["wout"]).persist()
-    ranks = base.select(
-        "node_id", "wout", F.lit(1.0 / n_nodes).alias("rank")
-    ).localCheckpoint(eager=True)
-    for _ in range(max_iter):
-        sc = ranks.select("node_id", "wout", "rank")
-        joined = (
-            salted_join(w, sc, key="src", salt=salt, dim_key="node_id")
-            if salt > 1
-            else w.join(sc, w["src"] == sc["node_id"])
-        )
-        push = joined.groupBy(F.col("dst").alias("node_id")).agg(
-            F.sum(F.col("rank") * F.col("w") / F.col("wout")).alias("contrib")
-        )
-        danglesum = (
-            ranks.filter(F.col("wout") == 0).agg(F.sum("rank")).collect()[0][0]
-            or 0.0
-        )
-        uniform = (alpha * danglesum + (1.0 - alpha)) / n_nodes
-        new_ranks = (
-            base.join(push, "node_id", "left")
-            .select(
-                "node_id",
-                "wout",
-                (
-                    F.lit(alpha) * F.coalesce(F.col("contrib"), F.lit(0.0))
-                    + F.lit(uniform)
-                ).alias("rank"),
-            )
-            .localCheckpoint(eager=True)
-        )
-        # tol == 0 pins an exact iteration count (the oracle-depth
-        # contract): the O(n) convergence join + collect can never
-        # trigger the early return, so skip it entirely
-        if tol > 0:
-            err = (
-                new_ranks.select("node_id", "rank")
-                .join(
-                    ranks.select("node_id", F.col("rank").alias("old")),
-                    "node_id",
-                )
-                .agg(F.sum(F.abs(F.col("rank") - F.col("old"))))
-                .collect()[0][0]
-            )
-            if err < n_nodes * tol:
-                return new_ranks.select(
-                    "node_id", F.col("rank").alias("score")
-                )
-        ranks = new_ranks
-    if strict:
-        raise PageRankDiverged(
-            f"weighted pagerank failed to converge in {max_iter} iterations"
-        )
-    return ranks.select("node_id", F.col("rank").alias("score"))
+    return _pagerank(
+        w, None, alpha, max_iter, tol, strict,
+        collect_threshold, salt, "weighted pagerank",
+    )[0]
 
 
 def pagerank_convergence(
@@ -575,87 +332,13 @@ def pagerank_convergence(
     guessing.
 
     Fixed depth (no early exit) so the unrolled SQL oracle is
-    round-for-round identical. Each iteration is the audited
-    distributed-PageRank shape — one rank-push join + map-side-combined
-    groupBy, lineage cut per round — plus exactly ONE bounded scalar
-    read: the delta aggregate, into which the NEXT round's dangling
-    mass (sum of new ranks over outdeg-0 nodes) is folded, so
-    convergence telemetry costs zero extra jobs over the plain loop.
-    The initial dangling mass is the closed form ``n_dangling / n``
-    (uniform start), not a job.
+    round-for-round identical. The rows are the distributed loop's own
+    per-round stats collect, so the profile costs no extra job over
+    :func:`static_pagerank`.
     """
-    spark = edges.sparkSession
-    dedup = (
-        edges.select("src", "dst").dropDuplicates(["src", "dst"]).persist()
+    _, rows = _pagerank(
+        _dedup(edges), None, alpha, iters, 0.0, False, 0, salt, "pagerank"
     )
-    nodes = (
-        dedup.select(F.col("src").alias("node_id"))
-        .unionAll(dedup.select(F.col("dst").alias("node_id")))
-        .distinct()
-        .persist()
+    return edges.sparkSession.createDataFrame(
+        rows, "iter long, l1_delta double, max_delta double"
     )
-    n_nodes = nodes.count()
-    out_schema = "iter long, l1_delta double, max_delta double"
-    if n_nodes == 0:
-        return spark.createDataFrame([], out_schema)
-    outdeg = dedup.groupBy(F.col("src").alias("node_id")).agg(
-        F.count("*").alias("outdeg")
-    )
-    base = (
-        nodes.join(outdeg, "node_id", "left")
-        .fillna(0, subset=["outdeg"])
-        .persist()
-    )
-    ranks = base.select(
-        "node_id", "outdeg", F.lit(1.0 / n_nodes).alias("rank")
-    ).localCheckpoint(eager=True)
-    danglesum = base.filter(F.col("outdeg") == 0).count() / n_nodes
-    from ..functions.skew import salted_join
-
-    rows = []
-    for i in range(1, iters + 1):
-        joined = salted_join(
-            dedup, ranks.select("node_id", "outdeg", "rank"),
-            key="src", salt=salt, dim_key="node_id",
-        ) if salt > 1 else dedup.join(
-            ranks, dedup["src"] == ranks["node_id"]
-        )
-        push = (
-            joined.groupBy(F.col("dst").alias("node_id"))
-            .agg(F.sum(F.col("rank") / F.col("outdeg")).alias("contrib"))
-        )
-        uniform = (alpha * danglesum + (1.0 - alpha)) / n_nodes
-        new_ranks = (
-            base.join(push, "node_id", "left")
-            .select(
-                "node_id",
-                "outdeg",
-                (
-                    F.lit(alpha) * F.coalesce(F.col("contrib"), F.lit(0.0))
-                    + F.lit(uniform)
-                ).alias("rank"),
-            )
-            # lazy: the stats collect below is the materializing action,
-            # so each round costs ONE job (checkpoint write piggybacks on
-            # the delta read) instead of two
-            .localCheckpoint(eager=False)
-        )
-        d = F.abs(F.col("rank") - F.col("old"))
-        stats = (
-            new_ranks.join(
-                ranks.select("node_id", F.col("rank").alias("old")),
-                "node_id",
-            )
-            .agg(
-                F.sum(d).alias("l1"),
-                F.max(d).alias("mx"),
-                F.sum(
-                    F.when(F.col("outdeg") == 0, F.col("rank"))
-                ).alias("dangle"),
-            )
-            .collect()[0]
-        )
-        rows.append((i, float(stats["l1"]), float(stats["mx"])))
-        danglesum = float(stats["dangle"] or 0.0)
-        ranks = new_ranks
-    return spark.createDataFrame(rows, out_schema)

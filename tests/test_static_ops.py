@@ -1,5 +1,7 @@
 """Static measures + graph algorithms vs pure-python oracles."""
 
+import re
+
 import numpy as np
 import pandas as pd
 import pytest
@@ -13,7 +15,12 @@ from online_centrality_spark.operators.static_degree import (
     static_indegree,
     static_negative_beta,
 )
-from online_centrality_spark.operators.static_pagerank import static_pagerank
+from online_centrality_spark.operators.static_pagerank import (
+    PageRankDiverged,
+    personalized_pagerank,
+    static_pagerank,
+    weighted_pagerank,
+)
 from online_centrality_spark.operators.triangles import (
     triangle_count,
     triangle_count_per_vertex,
@@ -71,6 +78,40 @@ def test_static_pagerank(spark, seed, threshold):
     assert got.keys() == want.keys()
     for k in want:
         assert got[k] == pytest.approx(want[k], abs=1e-6)
+
+
+_DIVERGE_PAIRS = [
+    (0, 1), (1, 2), (2, 0), (2, 3), (3, 4), (4, 5),
+    (5, 6), (6, 7), (7, 8), (8, 9), (0, 5), (9, 4), (6, 10),  # 10 dangles
+]
+
+
+@pytest.mark.parametrize("threshold", [0, 100_000])  # distributed vs compact
+@pytest.mark.parametrize(
+    "what", ["pagerank", "personalized pagerank", "weighted pagerank"]
+)
+def test_pagerank_strict_raises_diverged(spark, what, threshold):
+    """strict=True with too few rounds for tol raises PageRankDiverged
+    naming the variant, on both physical paths."""
+    kw = dict(max_iter=2, tol=1e-15, strict=True, collect_threshold=threshold)
+    edges = to_df(spark, set(_DIVERGE_PAIRS))
+    with pytest.raises(Exception) as ei:
+        if what == "pagerank":
+            static_pagerank(edges, **kw).collect()
+        elif what == "personalized pagerank":
+            seeds = spark.createDataFrame([(0,), (3,)], "node_id long")
+            personalized_pagerank(edges, seeds, **kw).collect()
+        else:
+            wedges = edges.withColumn("w", (edges["src"] % 3 + 1).cast("double"))
+            weighted_pagerank(wedges, **kw).collect()
+    # the compact kernel raises inside its Arrow task, which Spark
+    # re-raises on the driver as a PythonException carrying the
+    # original "PageRankDiverged: <message>" line
+    text = f"{ei.typename}: {ei.value}"
+    assert ei.type is PageRankDiverged or threshold > 0
+    assert re.search(
+        rf"\bPageRankDiverged: {what} failed to converge in 2 iterations", text
+    )
 
 
 @pytest.mark.parametrize("seed", [0, 1])
