@@ -1,19 +1,21 @@
-"""Single-source BFS hop distances by frontier expansion.
+"""Single-source BFS hop distances and the all-sources hop metrics.
 
-North-rule addition (standard link-graph toolkit). Level-synchronous
-BFS: each round joins the current frontier against the adjacency list,
-anti-joins the visited set, and stamps the round number as the
-distance. One shuffle join + one anti-join per level, lineage cut per
-round with ``localCheckpoint`` — the same loop discipline as the
-PageRank / CC / k-core iterations, so a deep traversal over a
-10^12-edge table keeps O(1) plans. Unreached nodes are emitted with
-``dist = NULL`` so the output covers the full node set.
+North-rule addition (standard link-graph toolkit). Every operator here
+is a level-synchronous BFS on :func:`.frontier.frontier_sweep` (one
+join + one anti-join and one driver action per level, lineage cut
+lazily per round); the callers only tag or aggregate the per-depth
+frontiers. Unreached nodes are emitted with ``dist = NULL`` so the
+``bfs_distances`` output covers the full node set.
 """
 
 from __future__ import annotations
 
+from functools import reduce
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from .frontier import frontier_sweep
 
 
 def bfs_distances(
@@ -23,44 +25,31 @@ def bfs_distances(
     max_rounds: int = 10_000,
 ) -> DataFrame:
     """(node_id, dist) — hop count from ``source`` (NULL if unreachable)."""
-    e = edges.select("src", "dst").filter(F.col("src") != F.col("dst"))
-    adj = e.dropDuplicates(["src", "dst"])
-    if not directed:
-        adj = adj.unionAll(
-            e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-        ).dropDuplicates(["src", "dst"])
-    adj = adj.persist()
-    nodes = (
-        e.select(F.col("src").alias("node_id"))
-        .unionAll(e.select(F.col("dst").alias("node_id")))
-        .distinct()
-        .persist()
-    )
-    spark = edges.sparkSession
-    frontier = nodes.filter(F.col("node_id") == source).localCheckpoint(eager=True)
-    visited = frontier.select("node_id", F.lit(0).cast("long").alias("dist"))
-    visited = visited.localCheckpoint(eager=True)
-    for r in range(1, max_rounds + 1):
-        if frontier.count() == 0:
-            break
-        nxt = (
+    adj, nodes = _sym_adjacency(edges, directed)
+
+    def expand(frontier):
+        return (
             adj.join(frontier.withColumnRenamed("node_id", "src"), "src", "left_semi")
             .select(F.col("dst").alias("node_id"))
             .distinct()
-            .join(visited.select("node_id"), "node_id", "left_anti")
-            .localCheckpoint(eager=True)
         )
-        visited = visited.unionAll(
-            nxt.select("node_id", F.lit(r).cast("long").alias("dist"))
-        ).localCheckpoint(eager=True)
-        frontier = nxt
-    else:
-        raise RuntimeError(f"bfs did not exhaust the frontier in {max_rounds} rounds")
-    return nodes.join(visited, "node_id", "left").select("node_id", "dist")
+
+    levels, _ = frontier_sweep(
+        nodes.filter(F.col("node_id") == source),
+        expand, ["node_id"], max_rounds, "bfs_distances",
+    )
+    dist = reduce(
+        DataFrame.unionByName,
+        (
+            f.select("node_id", F.lit(d).cast("long").alias("dist"))
+            for d, f in enumerate(levels)
+        ),
+    )
+    return nodes.join(dist, "node_id", "left").select("node_id", "dist")
 
 
 def _sym_adjacency(edges: DataFrame, directed: bool):
-    """(adj, nodes) for the all-sources sweeps — deduplicated adjacency
+    """(adj, nodes) for the BFS sweeps — deduplicated adjacency
     (symmetrized unless directed) and the distinct node set, both
     persisted (each feeds every BFS round)."""
     e = edges.select("src", "dst").filter(F.col("src") != F.col("dst"))
@@ -97,36 +86,41 @@ def _resolve_targets(nodes: DataFrame, targets) -> DataFrame:
     )
 
 
-def _all_pairs_frontiers(adj, seeds, max_rounds: int, tag: str):
-    """Shared all-sources level-synchronous BFS envelope: yields
-    ``(depth, frontier)`` where the frontier is exactly the (target,
-    node) pairs at shortest distance ``depth``, for every target in
-    ``seeds``. With seeds = all nodes, state is the quadratic (target,
-    node) visited relation — the price of exact all-pairs hop metrics;
-    with a k-node target sample (the 10^12-edge escape hatch) state is
-    k rows per node, the ``betweenness_from_pivots`` envelope.
-    Frontiers shrink monotonically as components saturate.
-    One shuffle join + one anti-join per depth, lineage cut per round.
-    Raises instead of yielding a truncated relation when ``max_rounds``
-    is hit (the engine's standard fixpoint discipline)."""
-    visited = seeds.select(
-        F.col("node_id").alias("target"), F.col("node_id").alias("node")
-    ).localCheckpoint(eager=True)
-    frontier = visited
-    for depth in range(1, max_rounds + 1):
-        expanded = (
+def _depth_counts(adj, seeds, max_rounds: int, what: str):
+    """All-sources BFS: ``(target, depth, cnt)`` — how many nodes each
+    target in ``seeds`` first reaches at hop distance ``depth`` along
+    ``adj`` (depth 0 is the target itself, cnt 1). The sweep state is
+    the (target, node) visited relation: quadratic with seeds = all
+    nodes (the price of exact all-pairs hop metrics), k rows per node
+    with a k-node target sample (the ``betweenness_from_pivots``
+    envelope, the 10^12-edge escape hatch). The per-depth frontiers
+    fold in ONE union + groupBy after the sweep, not a join per round.
+    """
+
+    def expand(frontier):
+        return (
             frontier.join(adj, frontier["node"] == adj["src"])
             .select("target", F.col("dst").alias("node"))
             .distinct()
         )
-        frontier = expanded.join(
-            visited, ["target", "node"], "left_anti"
-        ).localCheckpoint(eager=True)
-        if frontier.isEmpty():
-            return
-        yield depth, frontier
-        visited = visited.unionByName(frontier).localCheckpoint(eager=True)
-    raise RuntimeError(f"{tag} did not saturate in {max_rounds} rounds")
+
+    pairs = seeds.select(
+        F.col("node_id").alias("target"), F.col("node_id").alias("node")
+    )
+    levels, _ = frontier_sweep(
+        pairs, expand, ["target", "node"], max_rounds, what
+    )
+    return (
+        reduce(
+            DataFrame.unionByName,
+            (
+                f.select("target", F.lit(d).cast("long").alias("depth"))
+                for d, f in enumerate(levels)
+            ),
+        )
+        .groupBy("target", "depth")
+        .agg(F.count("*").alias("cnt"))
+    )
 
 
 def eccentricity(
@@ -138,32 +132,19 @@ def eccentricity(
     """(node_id, ecc) — max hop distance from each node to any node it
     can reach (its connected component in the undirected default).
 
-    All-sources BFS (:func:`_all_pairs_frontiers`); the targets that
-    still gained nodes this round bump their eccentricity to the
-    current depth. ``targets`` (int k = the k smallest node ids, or a
-    node_id frame — the ``betweenness_from_pivots`` pivot rule) is the
-    10^12-edge escape hatch: EXACT eccentricities for just the sampled
-    nodes, BFS state k rows per node instead of n^2; max over a target
-    sample lower-bounds the diameter, min upper-bounds the radius."""
+    All-sources BFS (:func:`_depth_counts`): a target's eccentricity is
+    the deepest level at which it still gained nodes. ``targets`` (int
+    k = the k smallest node ids, or a node_id frame — the
+    ``betweenness_from_pivots`` pivot rule) is the 10^12-edge escape
+    hatch: EXACT eccentricities for just the sampled nodes, BFS state k
+    rows per node instead of n^2; max over a target sample lower-bounds
+    the diameter, min upper-bounds the radius."""
     adj, nodes = _sym_adjacency(edges, directed)
     seeds = _resolve_targets(nodes, targets)
-    ecc = seeds.select("node_id", F.lit(0).cast("long").alias("ecc"))
-    ecc = ecc.localCheckpoint(eager=True)
-    for depth, frontier in _all_pairs_frontiers(
-        adj, seeds, max_rounds, "eccentricity"
-    ):
-        grew = frontier.select(F.col("target").alias("node_id")).distinct()
-        ecc = (
-            ecc.join(grew.withColumn("_g", F.lit(1)), "node_id", "left")
-            .select(
-                "node_id",
-                F.when(F.col("_g").isNotNull(), F.lit(depth).cast("long"))
-                .otherwise(F.col("ecc"))
-                .alias("ecc"),
-            )
-            .localCheckpoint(eager=True)
-        )
-    return ecc
+    counts = _depth_counts(adj, seeds, max_rounds, "eccentricity")
+    return counts.groupBy(F.col("target").alias("node_id")).agg(
+        F.max("depth").alias("ecc")
+    )
 
 
 def closeness_centrality(
@@ -177,37 +158,16 @@ def closeness_centrality(
     ``total_dist`` = sum of hop distances to them, ``closeness`` =
     reach / total_dist (0.0 when nothing is reachable).
 
-    Same envelope as :func:`eccentricity`, but instead of a per-round
-    score join it emits each round's tiny ``(target, gained-count,
-    depth)`` aggregate and folds them in ONE final union + groupBy —
-    no per-round update join at all. ``targets`` (int k = the k
-    smallest node ids, or a node_id frame) is the 10^12-edge escape
-    hatch: one row per sampled node with its EXACT closeness (each
-    sampled BFS still reaches the node's whole component), state k
-    rows per node instead of n^2."""
+    Same envelope as :func:`eccentricity`: the per-depth gain counts
+    fold into ``reach`` and ``total_dist`` in one groupBy. ``targets``
+    (int k = the k smallest node ids, or a node_id frame) is the
+    10^12-edge escape hatch: one row per sampled node with its EXACT
+    closeness (each sampled BFS still reaches the node's whole
+    component), state k rows per node instead of n^2."""
     adj, nodes = _sym_adjacency(edges, directed)
     seeds = _resolve_targets(nodes, targets)
-    per_depth: list[DataFrame] = []
-    for depth, frontier in _all_pairs_frontiers(
-        adj, seeds, max_rounds, "closeness"
-    ):
-        per_depth.append(
-            frontier.groupBy("target")
-            .agg(F.count("*").alias("cnt"))
-            .withColumn("depth", F.lit(depth).cast("long"))
-            .localCheckpoint(eager=True)
-        )
-    if not per_depth:
-        return seeds.select(
-            "node_id",
-            F.lit(0).cast("long").alias("reach"),
-            F.lit(0).cast("long").alias("total_dist"),
-            F.lit(0.0).alias("closeness"),
-        )
-    gains = per_depth[0]
-    for g in per_depth[1:]:
-        gains = gains.unionByName(g)
-    stats = gains.groupBy(F.col("target").alias("node_id")).agg(
+    counts = _depth_counts(adj, seeds, max_rounds, "closeness")
+    stats = counts.filter(F.col("depth") > 0).groupBy(F.col("target").alias("node_id")).agg(
         F.sum("cnt").cast("long").alias("reach"),
         F.sum(F.col("cnt") * F.col("depth")).cast("long").alias("total_dist"),
     )
@@ -241,12 +201,12 @@ def hop_distribution(
     diameter (smallest ``d`` covering ``eff_quantile`` of all reachable
     pairs — the standard small-world headline metric).
 
-    Same envelope as :func:`eccentricity`: each round's frontier IS the
-    pair set at distance ``depth``, so the distribution falls out as
-    one scalar count per round; the rounds fold in a single union over
-    the (diameter-bounded) depth frame, where the cumulative window is
-    explicitly safe. The cumulative fraction is a single division of
-    exact integer sums, so engines agree bit-for-bit before rounding.
+    Same envelope as :func:`eccentricity`: the pairs at distance ``d``
+    are the gain counts of depth ``d`` summed over targets, one row per
+    depth; the cumulative window over that (diameter-bounded) depth
+    frame is explicitly safe. The cumulative fraction is a single
+    division of exact integer sums, so engines agree bit-for-bit before
+    rounding.
 
     ``targets`` (int k = the k smallest node ids, or a node_id frame)
     is the 10^12-edge escape hatch: pairs are counted from the sampled
@@ -258,27 +218,12 @@ def hop_distribution(
     adj, nodes = _sym_adjacency(edges, directed)
     seeds = _resolve_targets(nodes, targets)
     sampled = targets is not None
-    spark = edges.sparkSession
-    per_depth: list[DataFrame] = []
-    for depth, frontier in _all_pairs_frontiers(
-        adj, seeds, max_rounds, "hop_distribution"
-    ):
-        per_depth.append(
-            frontier.agg(F.count("*").alias("n_pairs")).select(
-                F.lit(depth).cast("long").alias("d"), "n_pairs"
-            )
-        )
-    if not per_depth:
-        schema = "d long, n_pairs long, cum_frac double, eff_diameter long"
-        if sampled:
-            schema = (
-                "d long, n_pairs long, est_pairs double, cum_frac double,"
-                " eff_diameter long"
-            )
-        return spark.createDataFrame([], schema)
-    hd = per_depth[0]
-    for g in per_depth[1:]:
-        hd = hd.unionByName(g)
+    counts = _depth_counts(adj, seeds, max_rounds, "hop_distribution")
+    hd = (
+        counts.filter(F.col("depth") > 0)
+        .groupBy(F.col("depth").alias("d"))
+        .agg(F.sum("cnt").alias("n_pairs"))
+    )
     # depth frame is diameter-bounded — the global windows are explicit
     # and safe (same envelope as edge_stream_growth's day frame)
     from pyspark.sql import Window

@@ -22,17 +22,14 @@ strongly connected component (the CORE):
 - ``DISCONNECTED`` — outside the CORE's weak component entirely.
 
 Scale shape: one SCC run (``operators/scc.py``: active-set FW-BW
-coloring) plus SIX frontier-BFS reachability sweeps (forward/backward
-from CORE, forward from IN, backward from OUT, undirected from CORE).
-Each sweep's per-round work is ONE join of the shrinking frontier
-against the edge list followed by an anti-join against the marked set
-— O(effective diameter) rounds, never O(n) — with per-round lineage
-cut by ``localCheckpoint`` (the engine's standard superstep
-discipline). The final classification is a single pass of node-keyed
-left joins against the (node-bounded) marker frames; the only
-collected scalar is the 1-row giant-SCC pick. The class-precedence
-CASE is identical to the SQL oracle's, so the per-node partition is
-engine-reproducible bit-for-bit.
+coloring) plus FIVE reachability sweeps on
+:func:`.frontier.frontier_sweep` (forward/backward from CORE, forward
+from IN, backward from OUT, undirected from CORE) — O(effective
+diameter) rounds, never O(n). The final classification is a single
+pass of node-keyed left joins against the (node-bounded) marker
+frames; the only collected scalar is the 1-row giant-SCC pick. The
+class-precedence CASE is identical to the SQL oracle's, so the
+per-node partition is engine-reproducible bit-for-bit.
 """
 
 from __future__ import annotations
@@ -40,41 +37,28 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .frontier import frontier_sweep
 from .scc import strongly_connected_components
 
 
-def _reach_from(
+def _reach(
     edges: DataFrame, seeds: DataFrame, max_rounds: int, what: str
 ) -> DataFrame:
     """All ``node_id``s reachable from ``seeds`` along ``edges``
-    (seeds included). Frontier BFS: each round joins only the NEWLY
-    marked frontier against the edge list and anti-joins the marked
-    set, so total work is O(|E| * diameter) worst case and O(|E|)
-    on expander-like graphs where the frontier saturates fast."""
-    marked = seeds.select("node_id").distinct().localCheckpoint(eager=True)
-    frontier = marked
-    rounds = 0
-    while not frontier.isEmpty():
-        rounds += 1
-        if rounds > max_rounds:
-            raise RuntimeError(
-                f"bow-tie {what} sweep did not converge in {max_rounds} "
-                "rounds; raise max_rounds"
-            )
-        nxt = (
-            edges.join(
-                frontier.select(F.col("node_id").alias("src")), "src"
-            )
+    (seeds included): O(|E| * diameter) work worst case, O(|E|) on
+    expander-like graphs where the frontier saturates fast."""
+
+    def expand(frontier):
+        return (
+            edges.join(frontier.select(F.col("node_id").alias("src")), "src")
             .select(F.col("dst").alias("node_id"))
             .distinct()
-            .join(marked, "node_id", "left_anti")
-            .localCheckpoint(eager=True)
         )
-        if nxt.isEmpty():
-            break
-        marked = marked.unionAll(nxt).localCheckpoint(eager=True)
-        frontier = nxt
-    return marked
+
+    return frontier_sweep(
+        seeds.select("node_id").distinct(), expand, ["node_id"], max_rounds,
+        f"bowtie_decomposition {what} sweep",
+    )[1]
 
 
 def _flag(df: DataFrame, name: str) -> DataFrame:
@@ -122,17 +106,17 @@ def bowtie_decomposition(
         .localCheckpoint(eager=True)
     )
 
-    bwd = _reach_from(e, core, max_rounds, "CORE-forward")  # core -> v
-    fwd = _reach_from(rev, core, max_rounds, "CORE-backward")  # v -> core
+    bwd = _reach(e, core, max_rounds, "CORE-forward")  # core -> v
+    fwd = _reach(rev, core, max_rounds, "CORE-backward")  # v -> core
     in_nodes = fwd.join(core, "node_id", "left_anti").localCheckpoint(
         eager=True
     )
     out_nodes = bwd.join(core, "node_id", "left_anti").localCheckpoint(
         eager=True
     )
-    from_in = _reach_from(e, in_nodes, max_rounds, "IN-forward")
-    to_out = _reach_from(rev, out_nodes, max_rounds, "OUT-backward")
-    wcc = _reach_from(sym, core, max_rounds, "CORE-undirected")
+    from_in = _reach(e, in_nodes, max_rounds, "IN-forward")
+    to_out = _reach(rev, out_nodes, max_rounds, "OUT-backward")
+    wcc = _reach(sym, core, max_rounds, "CORE-undirected")
 
     cls = (
         nodes.join(_flag(core, "is_core"), "node_id", "left")

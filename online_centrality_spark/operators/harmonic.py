@@ -8,13 +8,14 @@ reference's "+0.001 so zero-score nodes appear" rule.
 
 Physical strategies:
 
-- **distributed**: multi-source BFS as DataFrame supersteps — the
-  frontier table (target, node, depth) expands one hop per iteration via
-  a join on reversed edges with an anti-join against visited; each new
-  (target, node) pair contributes 1/depth. State is O(V^2) worst case,
-  which matches the problem (all-pairs reachability) — the reference
-  only ever runs this on small sliding-window graphs
-  (``CentralityScoreComputer.py:128-133``).
+- **distributed**: the all-sources BFS of ``bfs.py`` over reversed
+  edges, seeded with every node (:func:`.frontier.frontier_sweep`);
+  each (target, node) pair first reached at depth d contributes 1/d.
+  The weighted variant is the same sweep with a distance column
+  (min-plus relaxation: only improved pairs re-enter the frontier).
+  State is O(V^2) worst case, which matches the problem (all-pairs
+  reachability) — the reference only ever runs this on small
+  sliding-window graphs (``CentralityScoreComputer.py:128-133``).
 - **compact** (below ``collect_threshold`` nodes): one Arrow task, numpy
   BFS per target.
 """
@@ -26,6 +27,9 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from .bfs import _depth_counts
+from .frontier import frontier_sweep
 
 _HC_SCHEMA = T.StructType(
     [
@@ -109,6 +113,10 @@ def harmonic_centrality(
     d(u, v) becomes the min-weight path length. Parallel (src, dst)
     edges dedup to the MINIMUM weight (deterministic; shortest paths
     only ever use the cheapest parallel edge).
+
+    ``max_hops`` caps the rounds of the distributed sweep (the compact
+    path is exact and ignores it); it is a round cap, not a semantic
+    truncation — a sweep that hits it raises ``RuntimeError``.
     """
     if weight_col is not None:
         dedup = (
@@ -145,17 +153,6 @@ def harmonic_centrality(
             yield pd.DataFrame({"node_id": nodes.astype(np.int64), "score": scores})
 
         return dedup.coalesce(1).mapInPandas(kernel, schema=_HC_SCHEMA)
-    if weight_col is not None:
-        return _harmonic_weighted_distributed(dedup, max_hops)
-    return _harmonic_distributed(dedup, max_hops)
-
-
-def _harmonic_weighted_distributed(dedup: DataFrame, max_hops: int) -> DataFrame:
-    """Min-plus frontier supersteps (distributed Bellman-Ford over all
-    targets at once): the dist table (target, node, dist) relaxes one
-    hop per round via a join on reversed weighted edges; only IMPROVED
-    rows re-enter the frontier, so rounds are bounded by the max hop
-    count of any shortest path and work shrinks as distances settle."""
     dedup = dedup.persist()
     nodes = (
         dedup.select(F.col("src").alias("node_id"))
@@ -163,96 +160,50 @@ def _harmonic_weighted_distributed(dedup: DataFrame, max_hops: int) -> DataFrame
         .distinct()
         .persist()
     )
-    dist = nodes.select(
-        F.col("node_id").alias("target"),
-        F.col("node_id").alias("node"),
-        F.lit(0.0).alias("dist"),
-    ).localCheckpoint(eager=True)
-    frontier = dist
-    for _ in range(max_hops):
-        cand = (
+    if weight_col is None:
+        rev = dedup.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
+        counts = _depth_counts(rev, nodes, max_hops, "harmonic_centrality")
+        gain = counts.filter(F.col("depth") > 0).select(
+            "target", (F.col("cnt") / F.col("depth")).alias("gain")
+        )
+    else:
+        gain = _weighted_gains(dedup, nodes, max_hops)
+    score = gain.groupBy(F.col("target").alias("node_id")).agg(
+        F.sum("gain").alias("s")
+    )
+    return nodes.join(score, "node_id", "left").select(
+        "node_id", F.coalesce(F.col("s"), F.lit(0.0)).alias("score")
+    )
+
+
+def _weighted_gains(dedup: DataFrame, nodes: DataFrame, max_hops: int):
+    """``(target, gain = 1/dist)`` for every pair at finite weighted
+    distance: min-plus frontier sweep (distributed Bellman-Ford over all
+    targets at once) on reversed weighted edges; only IMPROVED pairs
+    re-enter the frontier, so rounds are bounded by the max hop count
+    of any shortest path and work shrinks as distances settle."""
+
+    def expand(frontier):
+        return (
             frontier.join(dedup, frontier["node"] == dedup["dst"])
             .select(
                 "target",
                 F.col("src").alias("node"),
-                (F.col("dist") + F.col("w")).alias("nd"),
+                (F.col("dist") + F.col("w")).alias("dist"),
             )
             .groupBy("target", "node")
-            .agg(F.min("nd").alias("nd"))
+            .agg(F.min("dist").alias("dist"))
         )
-        improved = (
-            cand.join(dist, ["target", "node"], "left")
-            .filter(F.col("dist").isNull() | (F.col("nd") < F.col("dist")))
-            .select("target", "node", F.col("nd").alias("dist"))
-            .localCheckpoint(eager=True)
-        )
-        if improved.isEmpty():
-            break
-        dist = (
-            dist.join(improved.withColumnRenamed("dist", "nd"),
-                      ["target", "node"], "outer")
-            .select(
-                "target",
-                "node",
-                F.least(
-                    F.coalesce(F.col("dist"), F.col("nd")),
-                    F.coalesce(F.col("nd"), F.col("dist")),
-                ).alias("dist"),
-            )
-            .localCheckpoint(eager=True)
-        )
-        frontier = improved
-    return (
-        nodes.join(
-            dist.filter(F.col("node") != F.col("target"))
-            .groupBy(F.col("target").alias("node_id"))
-            .agg(F.sum(1.0 / F.col("dist")).alias("s")),
-            "node_id",
-            "left",
-        )
-        .select("node_id", F.coalesce(F.col("s"), F.lit(0.0)).alias("score"))
-    )
 
-
-def _harmonic_distributed(dedup: DataFrame, max_hops: int) -> DataFrame:
-    dedup = dedup.persist()
-    nodes = (
-        dedup.select(F.col("src").alias("node_id"))
-        .unionAll(dedup.select(F.col("dst").alias("node_id")))
-        .distinct()
-        .persist()
+    seeds = nodes.select(
+        F.col("node_id").alias("target"),
+        F.col("node_id").alias("node"),
+        F.lit(0.0).alias("dist"),
     )
-    # frontier/visited: (target, node) pairs reaching `target` in `depth` hops
-    visited = nodes.select(
-        F.col("node_id").alias("target"), F.col("node_id").alias("node")
-    ).localCheckpoint(eager=True)
-    frontier = visited
-    scores = nodes.select("node_id", F.lit(0.0).alias("score")).localCheckpoint(
-        eager=True
+    _, dist = frontier_sweep(
+        seeds, expand, ["target", "node"], max_hops,
+        "harmonic_centrality", value="dist",
     )
-    depth = 0
-    while depth < max_hops:
-        depth += 1
-        expanded = (
-            frontier.join(dedup, frontier["node"] == dedup["dst"])
-            .select("target", F.col("src").alias("node"))
-            .distinct()
-        )
-        frontier = expanded.join(visited, ["target", "node"], "left_anti").localCheckpoint(
-            eager=True
-        )
-        if frontier.isEmpty():
-            break
-        gain = frontier.groupBy(F.col("target").alias("node_id")).agg(
-            (F.count("*") / F.lit(float(depth))).alias("gain")
-        )
-        scores = (
-            scores.join(gain, "node_id", "left")
-            .select(
-                "node_id",
-                (F.col("score") + F.coalesce(F.col("gain"), F.lit(0.0))).alias("score"),
-            )
-            .localCheckpoint(eager=True)
-        )
-        visited = visited.unionByName(frontier).localCheckpoint(eager=True)
-    return scores
+    return dist.filter(F.col("node") != F.col("target")).select(
+        "target", (1.0 / F.col("dist")).alias("gain")
+    )

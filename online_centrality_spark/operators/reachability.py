@@ -12,18 +12,21 @@ Algorithm: label-correcting relaxation of arrival times —
 fixpoint. Arrival times only decrease and are bounded below, so the
 loop converges in at most (longest minimal hop chain) rounds.
 
-Scale shape per round: one equi-join of the (tiny, frontier-like)
-arrival table against the edge stream on ``src`` + one map-side
-combinable ``groupBy(dst).min(t)``; improvement detection is an
-anti/filter join on the same keys. Lineage is cut per round; the loop
-raises on a hit iteration cap rather than returning a truncated
-relation (same discipline as the engine's other fixpoints).
+Scale shape: a min-plus :func:`.frontier.frontier_sweep` with value
+column ``arrival`` — delta relaxation: only nodes whose arrival
+improved last round can produce new candidates (the relax term depends
+solely on arr(u) and the static edge set), so each round joins the
+frontier, not the settled table, against the edge stream on ``src``,
+followed by one map-side combinable ``groupBy(dst).min(t)``. The sweep
+raises on a hit round cap rather than returning a truncated relation.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from .frontier import frontier_sweep
 
 
 def temporal_reachability(
@@ -46,17 +49,9 @@ def temporal_reachability(
         t_start = e.agg(F.min("t")).collect()[0][0]
         if t_start is None:
             return spark.createDataFrame([], "node_id long, arrival long")
-    arr = spark.createDataFrame(
-        [(int(source), int(t_start))], "node_id long, arrival long"
-    ).localCheckpoint(eager=True)
-    # delta relaxation: only nodes whose arrival improved last round can
-    # produce new candidates (the relax term depends solely on arr(u)
-    # and the static edge set), so the probe side is the frontier, not
-    # the whole settled table — rounds stay O(frontier * deg) instead of
-    # re-relaxing every settled node every round
-    frontier = arr
-    for _ in range(max_iter):
-        relax = (
+
+    def expand(frontier):
+        return (
             e.join(
                 frontier.select(
                     F.col("node_id").alias("src"),
@@ -66,24 +61,13 @@ def temporal_reachability(
             )
             .filter(F.col("t") >= F.col("a"))
             .groupBy(F.col("dst").alias("node_id"))
-            .agg(F.min("t").alias("cand"))
+            .agg(F.min("t").alias("arrival"))
         )
-        improved = (
-            relax.join(arr, "node_id", "left")
-            .filter(F.col("arrival").isNull() | (F.col("cand") < F.col("arrival")))
-            .select("node_id", F.col("cand").alias("arrival"))
-            .localCheckpoint(eager=True)
-        )
-        if improved.isEmpty():
-            return arr
-        arr = (
-            arr.unionAll(improved)
-            .groupBy("node_id")
-            .agg(F.min("arrival").alias("arrival"))
-            .localCheckpoint(eager=True)
-        )
-        frontier = improved
-    raise RuntimeError(
-        f"temporal reachability did not converge in {max_iter} rounds; "
-        "raise max_iter"
+
+    source_row = spark.createDataFrame(
+        [(int(source), int(t_start))], "node_id long, arrival long"
     )
+    return frontier_sweep(
+        source_row, expand, ["node_id"], max_iter, "temporal_reachability",
+        value="arrival",
+    )[1]

@@ -24,11 +24,12 @@ Algorithm (Orzan-style coloring, the standard distributed SCC plan):
    handful of rounds.
 
 Scale shape: every inner step is one grouped/hash-join shuffle over the
-ACTIVE edge set, which shrinks monotonically as SCCs retire; per-round
-lineage is cut with ``localCheckpoint`` (the same superstep discipline
-as the replay engine). Like the engine's other fixpoint loops this
-fails loudly if an iteration cap is hit — a truncated SCC answer is
-never emitted silently.
+ACTIVE edge set, which shrinks monotonically as SCCs retire. The
+backward sweep is a :func:`.frontier.frontier_sweep` that expands only
+the newly flagged nodes; per-round lineage is cut with
+``localCheckpoint``. Like the engine's other fixpoint loops this fails
+loudly if an iteration cap is hit — a truncated SCC answer is never
+emitted silently.
 """
 
 from __future__ import annotations
@@ -37,6 +38,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .components import _nodes
+from .frontier import frontier_sweep
 
 
 def strongly_connected_components(
@@ -92,9 +94,6 @@ def strongly_connected_components(
                 "rounds; raise inner_max_iter"
             )
         # 2. backward flag propagation restricted to same-color edges
-        flagged = colors.filter(F.col("node_id") == F.col("color")).select(
-            "node_id", "color"
-        ).localCheckpoint(eager=True)
         ce = (
             e.join(
                 colors.select(
@@ -112,25 +111,21 @@ def strongly_connected_components(
             .select("src", "dst")
             .localCheckpoint(eager=True)
         )
-        for _ in range(inner_max_iter):
-            newly = (
-                ce.join(flagged.select(F.col("node_id").alias("dst")), "dst")
+
+        def expand(newly):
+            return (
+                ce.join(newly.select(F.col("node_id").alias("dst")), "dst")
                 .select(F.col("src").alias("node_id"))
                 .distinct()
-                .join(flagged, "node_id", "left_anti")
-                .join(colors, "node_id")
-                .localCheckpoint(eager=True)
             )
-            if newly.isEmpty():
-                break
-            flagged = flagged.unionAll(
-                newly.select("node_id", "color")
-            ).localCheckpoint(eager=True)
-        else:
-            raise RuntimeError(
-                f"SCC backward sweep did not converge in {inner_max_iter} "
-                "rounds; raise inner_max_iter"
-            )
+
+        # same-color edges only, so a flagged node carries its root's color
+        _, flagged = frontier_sweep(
+            colors.filter(F.col("node_id") == F.col("color")).select("node_id"),
+            expand, ["node_id"], inner_max_iter,
+            "strongly_connected_components backward sweep",
+        )
+        flagged = flagged.join(colors, "node_id").localCheckpoint(eager=False)
         finished.append(
             flagged.select("node_id", F.col("color").alias("component"))
         )
@@ -145,8 +140,8 @@ def strongly_connected_components(
             .localCheckpoint(eager=True)
         )
     # raise only on genuinely unfinished work: the last SCC may retire
-    # exactly on iteration max_iter, in which case the for/else top-of-
-    # loop isEmpty() break was never reached but nothing remains
+    # exactly on iteration max_iter, in which case the top-of-loop
+    # emptiness break was never reached but nothing remains
     if not remaining.isEmpty():
         raise RuntimeError(
             f"SCC did not retire every node in {max_iter} outer rounds; "

@@ -11,17 +11,20 @@ round can improve their out-neighbors; the same argument as
 fixpoint monotone, so extra rounds are no-ops and an unrolled SQL
 oracle at depth >= the true convergence round count is exact.
 
-Scale shape per round: one equi-join of the (shrinking) frontier
+Scale shape: a min-plus :func:`.frontier.frontier_sweep` with value
+column ``dist`` — per round one equi-join of the (shrinking) frontier
 against the persisted edge list + one map-side-combinable
-``groupBy(dst).min``; improvement detection is a left join against the
-settled table; lineage cut per round; loud divergence guard instead of
-a silently truncated relation.
+``groupBy(dst).min``, improvement detection by a left join against the
+settled table; loud round-cap guard instead of a silently truncated
+relation.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from .frontier import frontier_sweep
 
 
 def weighted_sssp(
@@ -38,12 +41,9 @@ def weighted_sssp(
     e = wedges.select(
         "src", "dst", F.col("w").cast("double").alias("w")
     ).persist()
-    dist = spark.createDataFrame(
-        [(int(source), 0.0)], "node_id long, dist double"
-    ).localCheckpoint(eager=True)
-    frontier = dist
-    for _ in range(max_iter):
-        relax = (
+
+    def expand(frontier):
+        return (
             e.join(
                 frontier.select(
                     F.col("node_id").alias("src"), F.col("dist").alias("a")
@@ -51,24 +51,13 @@ def weighted_sssp(
                 "src",
             )
             .groupBy(F.col("dst").alias("node_id"))
-            .agg(F.min(F.col("a") + F.col("w")).alias("cand"))
+            .agg(F.min(F.col("a") + F.col("w")).alias("dist"))
         )
-        improved = (
-            relax.join(dist, "node_id", "left")
-            .filter(F.col("dist").isNull() | (F.col("cand") < F.col("dist")))
-            .select("node_id", F.col("cand").alias("dist"))
-            .localCheckpoint(eager=True)
-        )
-        if improved.isEmpty():
-            return dist
-        dist = (
-            dist.unionAll(improved)
-            .groupBy("node_id")
-            .agg(F.min("dist").alias("dist"))
-            .localCheckpoint(eager=True)
-        )
-        frontier = improved
-    raise RuntimeError(
-        f"weighted sssp did not converge in {max_iter} rounds; "
-        "raise max_iter (rounds scale with the shortest-path hop depth)"
+
+    source_row = spark.createDataFrame(
+        [(int(source), 0.0)], "node_id long, dist double"
     )
+    return frontier_sweep(
+        source_row, expand, ["node_id"], max_iter, "weighted_sssp",
+        value="dist",
+    )[1]

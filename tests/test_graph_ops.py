@@ -330,3 +330,114 @@ def test_temporal_reachability_empty_stream(spark):
 
     out = temporal_reachability(_tedges(spark, []), source=0)
     assert out.count() == 0
+
+
+# --- frontier round cap ----------------------------------------------------
+
+# 0 -> 1 -> 2 -> 3 (weight 1.0, times 1, 2, 3): every sweep below has its
+# deepest non-empty frontier at depth 3, so a cap of 4 must finish and a
+# cap of 3 must raise.
+_PATH = [(0, 1, 1), (1, 2, 2), (2, 3, 3)]
+_PATH_DEPTH = 3
+
+
+def _path(spark):
+    return spark.createDataFrame(
+        [(u, v, 1.0, t) for u, v, t in _PATH],
+        "src long, dst long, w double, t long",
+    )
+
+
+def _by_node(df, col):
+    return {r["node_id"]: r[col] for r in df.collect()}
+
+
+def _path_bfs(spark, cap):
+    return _by_node(bfs_distances(_path(spark), 0, max_rounds=cap), "dist")
+
+
+def _path_ecc(spark, cap):
+    from online_centrality_spark.operators import eccentricity
+
+    return _by_node(eccentricity(_path(spark), max_rounds=cap), "ecc")
+
+
+def _path_bc(spark, cap):
+    from online_centrality_spark.operators import betweenness_from_pivots
+
+    out = betweenness_from_pivots(_path(spark), max_depth=cap)
+    return _by_node(out, "bc")
+
+
+def _path_ebc(spark, cap):
+    from online_centrality_spark.operators.betweenness import (
+        edge_betweenness_from_pivots,
+    )
+
+    out = edge_betweenness_from_pivots(_path(spark), max_depth=cap)
+    return {(r["src"], r["dst"]): r["ebc"] for r in out.collect()}
+
+
+def _path_bowtie(spark, cap):
+    from online_centrality_spark.operators import bowtie_decomposition
+
+    out = bowtie_decomposition(_path(spark), max_rounds=cap)
+    return _by_node(out, "bowtie_class")
+
+
+def _path_sssp(spark, cap):
+    from online_centrality_spark.operators.sssp import weighted_sssp
+
+    return _by_node(weighted_sssp(_path(spark), 0, max_iter=cap), "dist")
+
+
+def _path_reach(spark, cap):
+    from online_centrality_spark.operators.reachability import (
+        temporal_reachability,
+    )
+
+    out = temporal_reachability(_path(spark), 0, max_iter=cap)
+    return _by_node(out, "arrival")
+
+
+def _path_harmonic(weight_col):
+    def run(spark, cap):
+        from online_centrality_spark.operators import harmonic_centrality
+
+        out = harmonic_centrality(
+            _path(spark), collect_threshold=0, max_hops=cap,
+            weight_col=weight_col,
+        )
+        return {k: round(v, 12) for k, v in _by_node(out, "score").items()}
+
+    return run
+
+
+_HARMONIC_PATH = {0: 0.0, 1: 1.0, 2: 1.5, 3: round(1 + 1 / 2 + 1 / 3, 12)}
+
+
+@pytest.mark.parametrize(
+    "run, want",
+    [
+        (_path_bfs, {0: 0, 1: 1, 2: 2, 3: 3}),
+        (_path_ecc, {0: 3, 1: 2, 2: 2, 3: 3}),
+        (_path_bc, {0: 0.0, 1: 2.0, 2: 2.0, 3: 0.0}),
+        (_path_ebc, {(0, 1): 3.0, (1, 2): 4.0, (2, 3): 3.0}),
+        (_path_bowtie, {0: "CORE", 1: "OUT", 2: "OUT", 3: "OUT"}),
+        (_path_sssp, {0: 0.0, 1: 1.0, 2: 2.0, 3: 3.0}),
+        (_path_reach, {0: 1, 1: 1, 2: 2, 3: 3}),
+        (_path_harmonic(None), _HARMONIC_PATH),
+        (_path_harmonic("w"), _HARMONIC_PATH),
+    ],
+    ids=[
+        "bfs_distances", "eccentricity", "betweenness", "edge_betweenness",
+        "bowtie", "weighted_sssp", "temporal_reachability", "harmonic",
+        "weighted_harmonic",
+    ],
+)
+def test_frontier_round_cap_boundary(spark, run, want):
+    # the cap counts expansions: depth D needs D + 1 (the empty one stops
+    # the sweep); a cap of D raises instead of truncating the answer
+    assert run(spark, _PATH_DEPTH + 1) == want
+    with pytest.raises(RuntimeError):
+        run(spark, _PATH_DEPTH)

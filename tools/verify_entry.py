@@ -2,7 +2,9 @@
 
 Runs every ``queries()`` entry on Spark and its ``oracle_sql()`` twin on
 DuckDB over the same sf dir, then compares row count, column names, and
-an order-insensitive value hash. Usage:
+an order-insensitive value hash. Each query's Spark side runs under its
+own job group, and its ``ok``/``FAIL`` line ends with ``jobs=<n>``, the
+number of Spark jobs that group ran. Usage:
 
     python tools/verify_entry.py [sf_dir] [query ...]
 """
@@ -37,6 +39,11 @@ def normalize(pdf: pd.DataFrame) -> pd.DataFrame:
     return pdf.sort_values(list(pdf.columns)).reset_index(drop=True)
 
 
+def _jobs(sc, group: str) -> int:
+    """Spark jobs the named job group has run so far."""
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
 def main():
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
@@ -47,6 +54,7 @@ def main():
     for t in TABLES:
         con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
 
+    sc = spark.sparkContext
     qs = entry_mod.queries()
     oracles = entry_mod.oracle_sql()
     failures = []
@@ -54,21 +62,24 @@ def main():
         if only and name not in only:
             continue
         t0 = time.time()
+        sc.setJobGroup(name, name)
         try:
             got = fn(spark, sf_dir).toPandas()
         except Exception as e:
             failures.append(name)
-            print(f"FAIL {name}: spark error: {str(e)[:300]}")
+            print(f"FAIL {name}: spark error: {str(e)[:300]} "
+                  f"jobs={_jobs(sc, name)}")
             continue
+        jobs = f"jobs={_jobs(sc, name)}"
         if name not in oracles:
             print(f"ok   {name}: rows={len(got)} (rows-only, no oracle) "
-                  f"[{time.time()-t0:.1f}s]")
+                  f"[{time.time()-t0:.1f}s] {jobs}")
             continue
         try:
             want = con.sql(oracles[name]).df()
         except Exception as e:
             failures.append(name)
-            print(f"FAIL {name}: duckdb error: {str(e)[:300]}")
+            print(f"FAIL {name}: duckdb error: {str(e)[:300]} {jobs}")
             continue
         g, w = normalize(got), normalize(want)
         status = []
@@ -85,7 +96,8 @@ def main():
                 status.append("values differ: " + str(e).split("\n")[-2][:200])
         if status:
             failures.append(name)
-            print(f"FAIL {name}: {'; '.join(status)} [{time.time()-t0:.1f}s]")
+            print(f"FAIL {name}: {'; '.join(status)} "
+                  f"[{time.time()-t0:.1f}s] {jobs}")
             if len(g) == len(w) and list(g.columns) == list(w.columns):
                 diff = (g != w)
                 for c in g.columns:
@@ -94,7 +106,7 @@ def main():
                         print(f"     first diff col={c} row={i}: "
                               f"got={g[c][i]} want={w[c][i]}")
         else:
-            print(f"ok   {name}: rows={len(g)} [{time.time()-t0:.1f}s]")
+            print(f"ok   {name}: rows={len(g)} [{time.time()-t0:.1f}s] {jobs}")
     print(f"\n{len(failures)} failures: {failures}")
     return 1 if failures else 0
 
