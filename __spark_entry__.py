@@ -4855,14 +4855,17 @@ def q_type_pivot(spark, sf_dir):
     aggregation every analytics surface exports, via the DataFrame
     ``pivot`` API with an EXPLICIT value list (no extra distinct pass,
     deterministic column order). Day-of-week uses the repo's pure
-    integer epoch arithmetic (1970-01-01 was a Thursday), absent cells
-    coalesce to 0 — bit-identical to the oracle's FILTER counts."""
+    integer epoch arithmetic (1970-01-01 was a Thursday, 0 = Monday)
+    with floor division and a non-negative modulus, so pre-1970 days
+    are right too; absent cells coalesce to 0 — bit-identical to the
+    oracle's FILTER counts."""
     types = ["click", "error", "purchase", "signup", "view"]
     t = "unix_micros(CAST(ts AS TIMESTAMP))"
+    day = f"({t} - pmod({t}, 86400000000)) div 86400000000"
     wide = (
         _t(spark, sf_dir, "events")
         .select(
-            F.expr(f"(({t} div 86400000000) + 3) % 7").alias("dow"),
+            F.expr(f"pmod({day} + 3, 7)").alias("dow"),
             "event_type",
         )
         .groupBy("dow")
@@ -8733,14 +8736,19 @@ GROUP BY 1, 2
 HAVING count(*) >= 5
 """
     sqls["type_pivot"] = """
-SELECT (epoch_us(ts) // 86400000000 + 3) % 7 AS dow,
+WITH d AS (
+  SELECT (epoch_us(ts) - ((epoch_us(ts) % 86400000000) + 86400000000)
+            % 86400000000) // 86400000000 AS day, event_type
+  FROM events
+)
+SELECT ((day + 3) % 7 + 7) % 7 AS dow,
        CAST(count(*) FILTER (event_type = 'click') AS BIGINT) AS n_click,
        CAST(count(*) FILTER (event_type = 'error') AS BIGINT) AS n_error,
        CAST(count(*) FILTER (event_type = 'purchase') AS BIGINT)
          AS n_purchase,
        CAST(count(*) FILTER (event_type = 'signup') AS BIGINT) AS n_signup,
        CAST(count(*) FILTER (event_type = 'view') AS BIGINT) AS n_view
-FROM events
+FROM d
 GROUP BY 1
 """
     fh_hash = PORTABLE_HASH.format(s="f")

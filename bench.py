@@ -24,7 +24,8 @@ Noise robustness, two layers:
 - every row runs $BENCH_TRIALS times (default 3; the heavy full-replay
   rows $BENCH_HEAVY_TRIALS, default 2) with ``clearCache`` between
   trials; ``queries`` reports the BEST trial and the stats file keeps
-  per-row {best, spread, trials, probe}.
+  per-row {best, spread, trials, jobs, probe}, ``jobs`` being the most
+  Spark jobs one trial ran (each row runs under its own job group).
 - PROBE-GATED RETRY (VERDICT r04 #5): a ~4 s hardware probe is stamped
   at suite start/end and every $BENCH_PROBE_EVERY rows (default 20).
   Rows whose governing probe sits below the documented healthy floor
@@ -447,19 +448,27 @@ def main():
     stats: dict[str, dict] = {}
     extras: dict[str, float] = {}
 
+    sc = spark.sparkContext
+
     def execute(name, fn, n, replay_key, probe):
         """Run a row's trials; returns nothing, merges into the record.
         Replay fns return (elapsed, n_edges, info); plain fns return a
-        count."""
+        count. The trials run under the job group ``name``; ``jobs``
+        is the most Spark jobs one trial ran."""
         results = []
+        jobs = 0
+        sc.setJobGroup(name, name)
         for _ in range(n):
             spark.catalog.clearCache()
+            before = set(sc.statusTracker().getJobIdsForGroup(name))
             t = time.time()
             r = fn(spark, sf_dir)
             elapsed = time.time() - t
             if replay_key is not None:
                 elapsed = r[0]
             results.append((elapsed, r))
+            after = set(sc.statusTracker().getJobIdsForGroup(name))
+            jobs = max(jobs, len(after - before))
         best_t = min(e for e, _ in results)
         prev = stats.get(name)
         merged = sorted(
@@ -471,6 +480,7 @@ def main():
             "best": merged[0],
             "spread": round(merged[-1] - merged[0], 3),
             "trials": merged,
+            "jobs": max(jobs, prev["jobs"] if prev else 0),
         }
         if probe is not None:
             stats[name]["probe"] = probe

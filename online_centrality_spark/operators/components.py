@@ -1,19 +1,17 @@
 """Connected components and label propagation as iterative DataFrame joins.
 
 North-rule additions with no reference counterpart (standard semantics,
-validated against pure-python oracles in tests).
+validated against pure-python oracles in tests). Every loop here is a
+:func:`.frontier.fixpoint`: one lazy checkpoint and one ``(rows,
+changed)`` aggregate per round.
 
-- ``connected_components``: weakly connected components, two physical
-  strategies behind one surface (component = min node id in the WCC,
-  identical output either way):
-
-  * ``algorithm="star"`` (default): alternating large-star / small-star
-    contractions — O(log n) rounds regardless of diameter, the
-    100 TB-scale plan (each round is two grouped shuffles over the
-    current edge set, which SHRINKS towards one star per component).
-  * ``algorithm="hashmin"``: iterative hash-min label propagation — one
-    shuffle per round but O(diameter) rounds; kept for low-diameter
-    graphs and as the cross-check.
+- ``connected_components``: weakly connected components, component =
+  min node id in the WCC. One distributed plan, alternating large-star
+  / small-star contractions: O(log n) rounds regardless of diameter,
+  each round two grouped shuffles over the current edge set, which
+  SHRINKS towards one star per component. When the canonical edge set
+  fits one task (``collect_threshold``), a single-task union-find
+  kernel gives the identical labels without the rounds.
 
 - ``label_propagation``: synchronous LPA. Every node starts with its own
   id; each round a node adopts the most frequent label among its
@@ -26,6 +24,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+from .frontier import fixpoint
 
 
 def _sym(edges: DataFrame) -> DataFrame:
@@ -50,36 +50,11 @@ def _nodes(edges: DataFrame) -> DataFrame:
 def connected_components(
     edges: DataFrame,
     max_iter: int = 200,
-    algorithm: str = "star",
     collect_threshold: int = 100_000,
 ) -> DataFrame:
     """(node_id, component) — component = min node id in the WCC."""
-    labels, _ = connected_components_detail(
-        edges, max_iter, algorithm, collect_threshold
-    )
+    labels, _ = connected_components_detail(edges, max_iter, collect_threshold)
     return labels
-
-
-def connected_components_detail(
-    edges: DataFrame,
-    max_iter: int = 200,
-    algorithm: str = "star",
-    collect_threshold: int = 100_000,
-) -> tuple[DataFrame, int]:
-    """Like :func:`connected_components` but also returns the number of
-    rounds taken (convergence lineage for tests / metrics).
-
-    ``collect_threshold``: when the dedup'd canonical edge set fits a
-    single task (count <= threshold), a one-pass union-find kernel
-    replaces the round loop — identical output (component = min member
-    id) without per-round job latency, the same adaptive small-graph
-    fallback the harmonic operator uses. Pass 0 to force the
-    distributed algorithm (tests pinning round behavior do)."""
-    if algorithm == "star":
-        return _cc_star(edges, max_iter, collect_threshold)
-    if algorithm == "hashmin":
-        return _cc_hashmin(edges, max_iter)
-    raise ValueError(f"unknown algorithm {algorithm!r}")
 
 
 def _cc_local(cur: DataFrame, nodes: DataFrame) -> DataFrame:
@@ -124,68 +99,51 @@ def _cc_local(cur: DataFrame, nodes: DataFrame) -> DataFrame:
     return rows.mapInPandas(kernel, schema="node_id long, component long")
 
 
-def _cc_hashmin(edges: DataFrame, max_iter: int) -> tuple[DataFrame, int]:
-    sym = _sym(edges).persist()
-    labels = _nodes(edges).select(
-        "node_id", F.col("node_id").alias("component")
-    ).localCheckpoint(eager=True)
-    rounds = 0
-    for _ in range(max_iter):
-        nbr_min = (
-            sym.join(labels, sym["a"] == labels["node_id"])
-            .groupBy(F.col("b").alias("node_id"))
-            .agg(F.min("component").alias("nbr_min"))
-        )
-        new_labels = (
-            labels.join(nbr_min, "node_id", "left")
-            .select(
-                "node_id",
-                F.least(
-                    F.col("component"), F.coalesce(F.col("nbr_min"), F.col("component"))
-                ).alias("component"),
-                (F.col("nbr_min") < F.col("component")).alias("changed"),
-            )
-            .localCheckpoint(eager=True)
-        )
-        changed = new_labels.filter(F.col("changed")).count()
-        labels = new_labels.select("node_id", "component")
-        rounds += 1
-        if changed == 0:
-            break
-    return labels, rounds
-
-
-def _cc_star(
-    edges: DataFrame, max_iter: int, collect_threshold: int = 0
+def connected_components_detail(
+    edges: DataFrame,
+    max_iter: int = 200,
+    collect_threshold: int = 100_000,
 ) -> tuple[DataFrame, int]:
-    """Alternating large-star / small-star contractions (the classic
-    MapReduce CC algorithm): the edge set converges in O(log n) rounds
-    to one star per component, rooted at the component minimum.
+    """Like :func:`connected_components` but also returns the number of
+    rounds taken (convergence lineage for tests / metrics).
 
-    Round = large-star (every node hooks its LARGER neighbors onto the
-    minimum of its closed neighborhood) then small-star (every node
-    hooks its smaller-or-equal neighbors onto that minimum). Both
-    preserve connectivity; the fixed point is a star forest. Each round
-    is two grouped shuffles over the CURRENT edge set, which shrinks as
-    components contract — unlike hash-min, rounds do not scale with the
-    graph diameter.
-    """
-    nodes = _nodes(edges).persist()
+    Alternating large-star / small-star contractions (the classic
+    MapReduce CC plan): the edge set converges in O(log n) rounds to one
+    star per component, rooted at the component minimum. Round =
+    large-star (every node hooks its LARGER neighbors onto the minimum
+    of its closed neighborhood) then small-star (every node hooks its
+    smaller-or-equal neighbors onto that minimum). Both preserve
+    connectivity; the fixed point is a star forest. Each round is two
+    grouped shuffles over the CURRENT edge set, which shrinks as
+    components contract, so rounds do not scale with the graph
+    diameter. A round's ``changed`` marks the pairs not in the previous
+    set: no new pair and the same count means the set held.
+
+    ``collect_threshold``: when the dedup'd canonical edge set fits a
+    single task (count <= threshold), a one-pass union-find kernel
+    replaces the round loop — identical output (component = min member
+    id) without per-round job latency, the same adaptive small-graph
+    fallback the harmonic operator uses; rounds is then 0. Pass 0 to
+    force the distributed loop (tests pinning round behavior do)."""
+    # cut the input once: the pair set and the node set both read it
+    e = edges.select("src", "dst").localCheckpoint(eager=False)
+    nodes = _nodes(e)
     # canonical undirected pairs (h > l)
     cur = (
-        edges.select(
+        e.select(
             F.greatest("src", "dst").alias("h"), F.least("src", "dst").alias("l")
         )
         .filter(F.col("h") != F.col("l"))
         .distinct()
-        .localCheckpoint(eager=True)
+        .localCheckpoint(eager=False)
     )
-    # adaptive small-graph fallback: the pair set is already
-    # materialized, so this count is nearly free
-    if collect_threshold and cur.count() <= collect_threshold:
+    n_pairs = cur.count()
+    # adaptive small-graph fallback: the pair count is also the
+    # fixpoint's seed count, so this test costs no extra action
+    if collect_threshold and n_pairs <= collect_threshold:
         return _cc_local(cur, nodes), 0
-    rounds = 0
-    for _ in range(max_iter):
+
+    def step(cur):
         # large-star: neighbors from both directions; for node u emit
         # (v, min(N(u) + {u})) for every neighbor v > u
         sym = cur.select(F.col("h").alias("u"), F.col("l").alias("v")).unionAll(
@@ -214,27 +172,17 @@ def _cc_star(
             out.filter(F.col("x") != F.col("y"))
             .select(F.greatest("x", "y").alias("h"), F.least("x", "y").alias("l"))
             .distinct()
-            .localCheckpoint(eager=True)
         )
-        rounds += 1
-        same_size = new.count() == cur.count()
-        if same_size and new.join(cur, ["h", "l"], "left_anti").count() == 0:
-            cur = new
-            converged = True
-            break
-        cur = new
-    else:
-        converged = False
-    if not converged:
-        # outside the star-forest fixpoint a node can carry several l
-        # labels, and the final left join would emit duplicate node_id
-        # rows — silently corrupting every downstream consumer (e.g.
-        # attach_closure_components would duplicate edges). Fail loudly,
-        # matching the divergence guards elsewhere in the engine.
-        raise RuntimeError(
-            f"star CC did not reach the star-forest fixpoint in {max_iter} "
-            "rounds; raise max_iter (convergence is O(log n) rounds)"
-        )
+        return new.join(
+            cur.withColumn("_old", F.lit(True)), ["h", "l"], "left"
+        ).select("h", "l", F.col("_old").isNull().alias("changed"))
+
+    # the cap raises: short of the star forest a node can carry several
+    # l labels, and the join below would emit duplicate node_id rows
+    cur, rounds = fixpoint(
+        cur, step, max_iter, "connected_components star contraction (max_iter)",
+        rows=n_pairs,
+    )
     labels = (
         nodes.join(
             cur.select(F.col("h").alias("node_id"), F.col("l").alias("component")),
@@ -257,12 +205,10 @@ def bucketed_component_sizes(e: DataFrame, **cc_kwargs) -> DataFrame:
     — buckets can never merge because no edge crosses an encoding
     stripe, so the per-bucket component minimum decodes back exactly.
     The only driver-held values are the encoding scalars (the k-means
-    seed-read pattern). Shared harness of :func:`component_evolution`
-    and the attack-robustness operator.
+    seed-read pattern). Shared harness of :func:`component_evolution`,
+    :func:`threshold_profile` and the robustness operators. It reads
+    ``e`` three times, so callers pass a cut (lazily checkpointed) frame.
     """
-    # persist: the encoding-scalar agg and the CC's first checkpoint
-    # both read this frame (loop-input persist audit rule)
-    e = e.persist()
     mx = e.agg(
         F.greatest(F.max("src"), F.max("dst")).alias("mxn"),
         F.least(F.min("src"), F.min("dst")).alias("mnn"),
@@ -327,7 +273,7 @@ def threshold_profile(
         .filter(F.col("w") >= F.col("th"))
         .select("bkt", "src", "dst")
         .dropDuplicates(["bkt", "src", "dst"])
-        .persist()
+        .localCheckpoint(eager=False)
     )
     sizes = bucketed_component_sizes(tagged, **cc_kwargs)
     comp = sizes.groupBy("bkt").agg(
@@ -367,7 +313,7 @@ def component_evolution(
         F.expr(f"{t_col} div {bucket_us}").alias("bkt"),
         "src",
         "dst",
-    ).filter(F.col("src") != F.col("dst"))
+    ).filter(F.col("src") != F.col("dst")).localCheckpoint(eager=False)
     sizes = bucketed_component_sizes(e, **cc_kwargs)
     return sizes.groupBy(F.col("bkt").alias("day")).agg(
         F.count("*").alias("n_components"),
@@ -376,39 +322,42 @@ def component_evolution(
     )
 
 
+def _majority(sym: DataFrame, labels: DataFrame) -> DataFrame:
+    """``(node_id, best)``: the most frequent label among each node's
+    neighbors in ``sym``, ties broken by the smallest label — one
+    map-side-combinable (node, label) vote count plus a per-node top-1
+    window bounded by the node's distinct neighbor-label count."""
+    votes = (
+        sym.join(labels.select(F.col("node_id").alias("a"), "label"), "a")
+        .groupBy(F.col("b").alias("node_id"), "label")
+        .agg(F.count("*").alias("cnt"))
+    )
+    w = Window.partitionBy("node_id").orderBy(
+        F.col("cnt").desc(), F.col("label").asc()
+    )
+    return (
+        votes.withColumn("rn", F.row_number().over(w))
+        .filter(F.col("rn") == 1)
+        .select("node_id", F.col("label").alias("best"))
+    )
+
+
 def label_propagation(edges: DataFrame, max_iter: int = 10) -> DataFrame:
     """(node_id, label) — synchronous LPA with deterministic min-label ties."""
     sym = _sym(edges).persist()
-    labels = _nodes(edges).select(
-        "node_id", F.col("node_id").alias("label")
-    ).localCheckpoint(eager=True)
-    for _ in range(max_iter):
-        votes = (
-            sym.join(labels, sym["a"] == labels["node_id"])
-            .groupBy(F.col("b").alias("node_id"), F.col("label"))
-            .agg(F.count("*").alias("cnt"))
+
+    def step(labels):
+        return labels.join(_majority(sym, labels), "node_id", "left").select(
+            "node_id",
+            F.coalesce(F.col("best"), F.col("label")).alias("label"),
+            (F.col("best") != F.col("label")).alias("changed"),
         )
-        w = Window.partitionBy("node_id").orderBy(
-            F.col("cnt").desc(), F.col("label").asc()
-        )
-        best = (
-            votes.withColumn("rn", F.row_number().over(w))
-            .filter(F.col("rn") == 1)
-            .select("node_id", F.col("label").alias("new_label"))
-        )
-        new_labels = (
-            labels.join(best, "node_id", "left")
-            .select(
-                "node_id",
-                F.coalesce(F.col("new_label"), F.col("label")).alias("label"),
-                (F.col("new_label") != F.col("label")).alias("changed"),
-            )
-            .localCheckpoint(eager=True)
-        )
-        changed = new_labels.filter(F.col("changed")).count()
-        labels = new_labels.select("node_id", "label")
-        if changed == 0:
-            break
+
+    labels, _ = fixpoint(
+        _nodes(edges).select("node_id", F.col("node_id").alias("label")),
+        step, max_iter, "label_propagation", strict=False,
+    )
+    sym.unpersist()
     return labels
 
 
@@ -430,15 +379,13 @@ def seeded_label_spreading(
     both sides stop at the same round count. Nodes still unlabeled
     after the last round are omitted.
 
-    Scale shape per round: one edge-keyed join + one
-    map-side-combinable (node, label) vote count + one per-node
-    top-1 window on the vote frame (bounded by the node's distinct
-    neighbor-label count, not its degree), lineage cut per round —
-    the same superstep discipline as :func:`label_propagation`, with
-    the label frame carrying an ``is_seed`` clamp bit.
+    Scale shape per round: the :func:`label_propagation` round (one
+    edge-keyed join, one vote count, one per-node top-1 window) over
+    the labeled nodes, with the label frame carrying an ``is_seed``
+    clamp bit.
     """
     sym = _sym(edges).persist()
-    state = (
+    seed = (
         _nodes(edges)
         .join(
             seeds.select("node_id", F.col("label").alias("_sl")),
@@ -450,50 +397,27 @@ def seeded_label_spreading(
             F.col("_sl").alias("label"),
             F.col("_sl").isNotNull().alias("is_seed"),
         )
-        .localCheckpoint(eager=True)
     )
-    for _ in range(max_iter):
-        votes = (
-            sym.join(
-                state.filter(F.col("label").isNotNull()).select(
-                    F.col("node_id").alias("a"), "label"
-                ),
-                "a",
-            )
-            .groupBy(F.col("b").alias("node_id"), F.col("label"))
-            .agg(F.count("*").alias("cnt"))
+
+    def step(state):
+        best = _majority(sym, state.filter(F.col("label").isNotNull()))
+        return state.join(best, "node_id", "left").select(
+            "node_id",
+            F.when(F.col("is_seed"), F.col("label"))
+            .otherwise(F.coalesce(F.col("best"), F.col("label")))
+            .alias("label"),
+            "is_seed",
+            (
+                ~F.col("is_seed")
+                & F.col("best").isNotNull()
+                & (F.col("label").isNull() | (F.col("best") != F.col("label")))
+            ).alias("changed"),
         )
-        w = Window.partitionBy("node_id").orderBy(
-            F.col("cnt").desc(), F.col("label").asc()
-        )
-        best = (
-            votes.withColumn("rn", F.row_number().over(w))
-            .filter(F.col("rn") == 1)
-            .select("node_id", F.col("label").alias("best"))
-        )
-        nxt = (
-            state.join(best, "node_id", "left")
-            .select(
-                "node_id",
-                F.when(F.col("is_seed"), F.col("label"))
-                .otherwise(F.coalesce(F.col("best"), F.col("label")))
-                .alias("label"),
-                "is_seed",
-                (
-                    ~F.col("is_seed")
-                    & F.col("best").isNotNull()
-                    & (
-                        F.col("label").isNull()
-                        | (F.col("best") != F.col("label"))
-                    )
-                ).alias("changed"),
-            )
-            .localCheckpoint(eager=True)
-        )
-        changed = nxt.filter(F.col("changed")).count()
-        state = nxt.select("node_id", "label", "is_seed")
-        if changed == 0:
-            break
+
+    state, _ = fixpoint(
+        seed, step, max_iter, "seeded_label_spreading", strict=False
+    )
+    sym.unpersist()
     return state.filter(F.col("label").isNotNull()).select(
         "node_id", "label"
     )

@@ -1,22 +1,24 @@
-"""One level-synchronous frontier sweep for the BFS and min-plus loops.
+"""The engine's two iteration primitives: a frontier sweep and a fixpoint.
 
-Every traversal operator in the engine (BFS distances, all-pairs hop
-metrics, harmonic centrality, the Brandes forward sweep, bow-tie
-reachability, weighted SSSP, earliest-arrival reachability and the SCC
-backward flagging) is the same loop: expand the frontier through the
-edges, keep the candidates that are new (or, with a value column,
-improved), stop when nothing is left, and merge into a settled frame.
-:func:`frontier_sweep` is that loop; callers supply only the expansion
+:func:`frontier_sweep` is the level-synchronous BFS / min-plus loop
+(BFS distances, all-pairs hop metrics, harmonic centrality, the Brandes
+forward sweep, bow-tie reachability, weighted SSSP, earliest-arrival
+reachability, the SCC backward flagging). Use it when a round touches
+only the keys the previous round reached: callers supply the expansion
 and fold the per-depth frontiers into their own output.
 
-Scale shape per round: the caller's expansion (one join of the
-frontier against the persisted edges plus one per-key aggregate), one
-anti-join (or, with a value column, a left join) against the settled
-frame, and exactly ONE driver action: the frontier's row count, which
-is both the stop test and the job that materializes the frontier's
-lazy ``localCheckpoint``. The settled frame is checkpointed lazily too
-and materialized by the next round's join — the round shape of the
-distributed PageRank loop, so plans stay O(1) at any depth.
+:func:`fixpoint` is the whole-state loop (star-CC contraction, label
+propagation, seeded label spreading, the SCC forward coloring, the
+k-core and k-truss peels). Use it when every round rewrites the whole
+state — a label per node or a shrinking edge set — and the loop stops
+when a round changes nothing.
+
+Scale shape per round, both: the caller's joins and aggregates, a lazy
+``localCheckpoint`` of the round's output, and exactly ONE driver
+action that is both the stop test and the job that materializes the
+checkpoint (a row count for the sweep, one ``(rows, changed)``
+aggregate for the fixpoint) — the round shape of the distributed
+PageRank loop, so plans stay O(1) at any depth.
 """
 
 from __future__ import annotations
@@ -83,3 +85,49 @@ def frontier_sweep(
         f"{what}: the frontier is still non-empty after {max_rounds} "
         "rounds; raise the round cap"
     )
+
+
+def fixpoint(
+    seed: DataFrame,
+    step: Callable[[DataFrame], DataFrame],
+    max_rounds: int,
+    what: str,
+    strict: bool = True,
+    rows: int | None = None,
+) -> tuple[DataFrame, int]:
+    """Iterate ``step`` from ``seed`` to its fixpoint; return ``(state,
+    rounds)``.
+
+    ``step(state)`` returns the next state plus a boolean ``changed``
+    column. A round converges when no row is ``changed`` and the row
+    count held: label frames mark moved labels; a shrinking edge set
+    marks rows absent from the previous state (no new row and the same
+    count = the same set); peels use a constant false (the count held).
+    ``rows`` is the seed's row count when the caller already has it
+    (the seed is then taken as is); otherwise the seed is checkpointed
+    and counted, one action.
+
+    Round cap: a fixpoint whose last changing round is R needs
+    ``max_rounds >= R + 1``. At the cap the loop raises
+    ``RuntimeError`` naming ``what`` or, with ``strict=False`` (a
+    contract of "at most ``max_rounds`` rounds"), returns the state.
+    """
+    state = seed
+    if rows is None:
+        state = seed.localCheckpoint(eager=False)
+        rows = state.count()
+    for rnd in range(1, max_rounds + 1):
+        nxt = step(state).localCheckpoint(eager=False)
+        n, changed = nxt.agg(
+            F.count(F.lit(1)), F.count(F.when(F.col("changed"), 1))
+        ).collect()[0]
+        state = nxt.drop("changed")
+        if changed == 0 and n == rows:
+            return state, rnd
+        rows = n
+    if strict:
+        raise RuntimeError(
+            f"{what}: no fixpoint after {max_rounds} rounds; raise the "
+            "round cap"
+        )
+    return state, max_rounds

@@ -6,20 +6,24 @@ degree >= k; peeling (repeatedly deleting nodes with degree < k)
 converges to it regardless of deletion order, which is what makes a
 fixed-round unrolled SQL oracle possible.
 
-Scale design: each peel round is one map-side-combinable degree
-aggregate + one semi-join filter of the edge list — no windows, no
-driver state beyond the per-round survivor count (a scalar). Lineage is
-cut every round with ``localCheckpoint`` exactly like the PageRank /
-CC loops, so a 100-round peel on a 10^12-edge table never replays the
-full chain. ``core_number`` runs ascending-k peels on the shrinking
-survivor graph (the (k+1)-core is inside the k-core, so each step
-starts from the previous step's — usually far smaller — edge set).
+Scale shape: ``_peel`` and :func:`k_truss` are
+:func:`.frontier.fixpoint` loops over the shrinking edge set. A k-core
+round is one map-side-combinable degree aggregate plus two semi-join
+filters; a k-truss round is the a<b<c triangle join plus one support
+aggregate. Each round costs one lazy ``localCheckpoint`` and one
+``(rows, changed)`` aggregate; with ``changed`` constant false the peel
+stops when the row count holds, and it raises at the round cap.
+``core_number`` runs ascending-k peels on the shrinking survivor graph
+(the (k+1)-core is inside the k-core, so each step starts from the
+previous step's — usually far smaller — edge set).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from .frontier import fixpoint
 
 
 def _und(edges: DataFrame) -> DataFrame:
@@ -32,11 +36,8 @@ def _und(edges: DataFrame) -> DataFrame:
 
 def _peel(und: DataFrame, k: int, max_rounds: int) -> DataFrame:
     """Edge list of the k-core of an undirected simple edge list."""
-    cur = und.localCheckpoint(eager=True)
-    n_edges = cur.count()
-    for _ in range(max_rounds):
-        if n_edges == 0:
-            return cur
+
+    def step(cur):
         deg = (
             cur.select(F.col("a").alias("n"))
             .unionAll(cur.select(F.col("b").alias("n")))
@@ -44,20 +45,15 @@ def _peel(und: DataFrame, k: int, max_rounds: int) -> DataFrame:
             .agg(F.count("*").alias("d"))
         )
         keep = deg.filter(F.col("d") >= k).select("n")
-        nxt = (
+        return (
             cur.join(keep.withColumnRenamed("n", "a"), "a", "left_semi")
             .join(keep.withColumnRenamed("n", "b"), "b", "left_semi")
-            .select("a", "b")
-            .localCheckpoint(eager=True)
+            .select("a", "b", F.lit(False).alias("changed"))
         )
-        n_nxt = nxt.count()
-        if n_nxt == n_edges:
-            return nxt
-        cur, n_edges = nxt, n_nxt
-    raise RuntimeError(
-        f"k-core peel did not converge in {max_rounds} rounds (k={k}); "
-        "raise max_rounds — each round removes at least one node"
-    )
+
+    # each round removes at least one node until the count holds
+    core, _ = fixpoint(und, step, max_rounds, f"k-core peel (k={k}, max_rounds)")
+    return core
 
 
 def k_core(edges: DataFrame, k: int, max_rounds: int = 1000) -> DataFrame:
@@ -85,7 +81,7 @@ def core_number(edges: DataFrame, max_rounds: int = 1000) -> DataFrame:
     cur = _und(edges).localCheckpoint(eager=True)
     out: DataFrame | None = None
     k = 1
-    while cur.count() > 0:
+    while not cur.isEmpty():
         nxt = _peel(cur, k + 1, max_rounds)
         survivors = (
             nxt.select(F.col("a").alias("node_id"))
@@ -107,12 +103,7 @@ def core_number(edges: DataFrame, max_rounds: int = 1000) -> DataFrame:
         cur = nxt
         k += 1
     if out is None:
-        from pyspark.sql.types import LongType, StructField, StructType
-
-        return spark.createDataFrame(
-            [], StructType([StructField("node_id", LongType()),
-                            StructField("core", LongType())])
-        )
+        return spark.createDataFrame([], "node_id long, core long")
     return out
 
 
@@ -122,25 +113,18 @@ def k_truss(edges: DataFrame, k: int, max_iter: int = 100) -> DataFrame:
     *within the subgraph*. Standard peel: count per-edge support via
     the a<b<c triangle join over the CURRENT edge set, drop edges below
     threshold, repeat to fixpoint (the edge set shrinks monotonically,
-    so each round's joins get cheaper). Like the engine's other
-    fixpoints: per-round ``localCheckpoint``, loud guard on ``max_iter``.
+    so each round's joins get cheaper). A :func:`.frontier.fixpoint`
+    loop: it raises rather than return a truncated peel at ``max_iter``.
 
     North-rule link-graph extension; no reference counterpart.
     """
     sup_needed = k - 2
-    cur = (
-        edges.select("src", "dst")
-        .filter(F.col("src") != F.col("dst"))
-        .select(F.least("src", "dst").alias("a"), F.greatest("src", "dst").alias("b"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    for _ in range(max_iter):
-        e1 = cur
+
+    def step(cur):
         e2 = cur.select(F.col("a").alias("b"), F.col("b").alias("c"))
         e3 = cur.select(F.col("a").alias("a3"), F.col("b").alias("c3"))
         tris = (
-            e1.join(e2, "b")
+            cur.join(e2, "b")
             .join(e3, (F.col("a") == F.col("a3")) & (F.col("c") == F.col("c3")))
             .select("a", "b", "c")
         )
@@ -151,16 +135,20 @@ def k_truss(edges: DataFrame, k: int, max_iter: int = 100) -> DataFrame:
             .groupBy(F.col("x").alias("a"), F.col("y").alias("b"))
             .agg(F.count("*").alias("support"))
         )
-        nxt = (
+        return (
             cur.join(sup, ["a", "b"], "left")
             .filter(F.coalesce(F.col("support"), F.lit(0)) >= sup_needed)
-            .select("a", "b")
-            .localCheckpoint(eager=True)
+            .select("a", "b", F.lit(False).alias("changed"))
         )
-        if nxt.count() == cur.count():
-            return nxt
-        cur = nxt
-    raise RuntimeError(f"k-truss peel did not converge in {max_iter} rounds")
+
+    truss, _ = fixpoint(
+        edges.select("src", "dst")
+        .filter(F.col("src") != F.col("dst"))
+        .select(F.least("src", "dst").alias("a"), F.greatest("src", "dst").alias("b"))
+        .distinct(),
+        step, max_iter, f"k_truss peel (k={k}, max_iter)",
+    )
+    return truss
 
 
 def onion_decomposition(edges: DataFrame, max_rounds: int = 10000) -> DataFrame:

@@ -40,7 +40,7 @@ def attack_robustness(
         )
         .filter(F.col("a") != F.col("b"))
         .dropDuplicates(["a", "b"])
-        .persist()
+        .localCheckpoint(eager=False)
     )
     deg = (
         und.select(F.col("a").alias("n"))
@@ -82,7 +82,7 @@ def attack_robustness(
             "a",
             "b",
         )
-        .persist()
+        .localCheckpoint(eager=False)
     )
     # shared stripe-encode -> one-CC-run -> decode harness (carries the
     # negative-id and int64-overflow guards)
@@ -158,7 +158,7 @@ def random_failure(
         und.crossJoin(F.broadcast(lad))
         .filter(F.col("hmin") >= F.col("pct"))
         .select("bkt", F.col("a").alias("src"), F.col("b").alias("dst"))
-        .persist()
+        .localCheckpoint(eager=False)
     )
     sizes = bucketed_component_sizes(tagged, **cc_kwargs)
     comp = sizes.groupBy("bkt").agg(

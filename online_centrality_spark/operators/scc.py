@@ -23,13 +23,13 @@ Algorithm (Orzan-style coloring, the standard distributed SCC plan):
    retires one whole SCC per color class, so real graphs finish in a
    handful of rounds.
 
-Scale shape: every inner step is one grouped/hash-join shuffle over the
-ACTIVE edge set, which shrinks monotonically as SCCs retire. The
-backward sweep is a :func:`.frontier.frontier_sweep` that expands only
-the newly flagged nodes; per-round lineage is cut with
-``localCheckpoint``. Like the engine's other fixpoint loops this fails
-loudly if an iteration cap is hit — a truncated SCC answer is never
-emitted silently.
+Scale shape: every inner round is one grouped/hash-join shuffle over
+the ACTIVE edge set, which shrinks monotonically as SCCs retire. The
+forward coloring is a :func:`.frontier.fixpoint` (one lazy checkpoint
+and one ``(rows, changed)`` aggregate per round); the backward sweep is
+a :func:`.frontier.frontier_sweep` that expands only the newly flagged
+nodes. Both raise at ``inner_max_iter`` and the outer loop at
+``max_iter`` — a truncated SCC answer is never emitted silently.
 """
 
 from __future__ import annotations
@@ -38,7 +38,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .components import _nodes
-from .frontier import frontier_sweep
+from .frontier import fixpoint, frontier_sweep
 
 
 def strongly_connected_components(
@@ -61,13 +61,11 @@ def strongly_connected_components(
     remaining = _nodes(e).localCheckpoint(eager=True)
     finished: list[DataFrame] = []
     for _ in range(max_iter):
-        if remaining.isEmpty():
+        n_remaining = remaining.count()
+        if n_remaining == 0:
             break
-        colors = remaining.select(
-            "node_id", F.col("node_id").alias("color")
-        ).localCheckpoint(eager=True)
         # 1. forward min-color propagation to fixpoint
-        for _ in range(inner_max_iter):
+        def step(colors):
             in_min = (
                 e.join(
                     colors.select(
@@ -79,20 +77,20 @@ def strongly_connected_components(
                 .groupBy(F.col("dst").alias("node_id"))
                 .agg(F.min("src_color").alias("in_min"))
             )
-            joined = colors.join(in_min, "node_id", "left")
-            if joined.filter(F.col("in_min") < F.col("color")).isEmpty():
-                break
-            colors = joined.select(
+            return colors.join(in_min, "node_id", "left").select(
                 "node_id",
-                F.least(
-                    "color", F.coalesce("in_min", F.col("color"))
-                ).alias("color"),
-            ).localCheckpoint(eager=True)
-        else:
-            raise RuntimeError(
-                f"SCC forward coloring did not converge in {inner_max_iter} "
-                "rounds; raise inner_max_iter"
+                F.least("color", F.coalesce("in_min", F.col("color"))).alias(
+                    "color"
+                ),
+                (F.col("in_min") < F.col("color")).alias("changed"),
             )
+
+        colors, _ = fixpoint(
+            remaining.select("node_id", F.col("node_id").alias("color")),
+            step, inner_max_iter,
+            "strongly_connected_components forward coloring (inner_max_iter)",
+            rows=n_remaining,
+        )
         # 2. backward flag propagation restricted to same-color edges
         ce = (
             e.join(

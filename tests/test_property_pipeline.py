@@ -113,7 +113,7 @@ def test_cc_fast_path_matches_union_find(spark, edges):
     df = spark.createDataFrame(
         pd.DataFrame(edges, columns=["src", "dst"]).astype("int64")
     )
-    labels, rounds = connected_components_detail(df, algorithm="star")
+    labels, rounds = connected_components_detail(df)
     assert rounds == 0  # fast path taken at this size
     got = {r["node_id"]: r["component"] for r in labels.collect()}
     assert got == py_wcc(edges)

@@ -26,25 +26,46 @@ def _md5_bucket(s: str, buckets: int = 64) -> int:
 def test_type_pivot_by_hand(spark, tmp_path):
     """1970-01-01 was a Thursday (dow 3 under the 0=Monday rule);
     1970-01-05 a Monday (dow 0). Two clicks + one view on Thursday,
-    one purchase on Monday; every absent cell must be 0, not null."""
+    one purchase on Monday; every absent cell must be 0, not null.
+    Pre-1970 days need floor division and a non-negative modulus:
+    1969-12-20 was a Saturday (5), 1969-12-31 a Wednesday (2). The
+    DuckDB oracle gives the same table."""
+    import duckdb
+
     ev = spark.createDataFrame(
         [
             (1, TS(1970, 1, 1, 10, 0), "u1", "click", 1.0, "{}"),
             (2, TS(1970, 1, 1, 11, 0), "u1", "click", 1.0, "{}"),
             (3, TS(1970, 1, 1, 12, 0), "u2", "view", 1.0, "{}"),
             (4, TS(1970, 1, 5, 9, 0), "u1", "purchase", 1.0, "{}"),
+            (5, TS(1969, 12, 20, 12, 0), "u1", "signup", 1.0, "{}"),
+            (6, TS(1969, 12, 31, 12, 0), "u2", "error", 1.0, "{}"),
         ],
         EVENTS_SCHEMA,
     )
     ev.write.parquet(str(tmp_path / "events.parquet"))
+    cols = ["dow", "n_click", "n_error", "n_purchase", "n_signup", "n_view"]
+    want = {
+        3: (2, 0, 0, 0, 1),
+        0: (0, 0, 1, 0, 0),
+        5: (0, 0, 0, 1, 0),
+        2: (0, 1, 0, 0, 0),
+    }
     got = {
-        r["dow"]: (
-            r["n_click"], r["n_error"], r["n_purchase"], r["n_signup"],
-            r["n_view"],
-        )
+        r["dow"]: tuple(r[c] for c in cols[1:])
         for r in entry.q_type_pivot(spark, str(tmp_path)).collect()
     }
-    assert got == {3: (2, 0, 0, 0, 1), 0: (0, 0, 1, 0, 0)}
+    assert got == want
+    con = duckdb.connect()
+    con.sql(
+        "CREATE VIEW events AS SELECT * FROM "
+        f"'{tmp_path}/events.parquet/*.parquet'"
+    )
+    oracle = con.sql(entry.oracle_sql()["type_pivot"]).df()
+    assert {
+        int(r["dow"]): tuple(int(r[c]) for c in cols[1:])
+        for _, r in oracle.iterrows()
+    } == want
 
 
 def test_hashed_features_matches_reference_md5(spark):

@@ -311,8 +311,9 @@ def test_static_katz_matches_dense_series(spark):
 
 
 def test_cc_star_vs_hashmin_and_round_count(spark):
-    """Both algorithms agree with the oracle; the star variant converges
-    in O(log n) rounds on a long path where hash-min needs O(diameter)."""
+    """The star contraction agrees with the oracle and converges in
+    O(log n) rounds on a long path (diameter 119), where one-hop label
+    propagation would need O(diameter)."""
     from online_centrality_spark.operators.components import (
         connected_components_detail,
     )
@@ -322,23 +323,109 @@ def test_cc_star_vs_hashmin_and_round_count(spark):
     clique = [(200 + a, 200 + b) for a in range(6) for b in range(a + 1, 6)]
     es = path + clique + [(300, 301)]
     df = to_df(spark, es)
-    # collect_threshold=0 pins the DISTRIBUTED star algorithm
-    star, r_star = connected_components_detail(
-        df, algorithm="star", collect_threshold=0
-    )
-    hm, r_hm = connected_components_detail(df, algorithm="hashmin")
+    # collect_threshold=0 pins the DISTRIBUTED star contraction
+    star, r_star = connected_components_detail(df, collect_threshold=0)
     want = oracle_wcc(es)
     got_star = {r["node_id"]: r["component"] for r in star.collect()}
-    got_hm = {r["node_id"]: r["component"] for r in hm.collect()}
     assert got_star == want
-    assert got_hm == want
-    # hash-min propagates one hop per round (O(diameter)); star doubles
-    assert r_hm >= 60
-    assert 0 < r_star <= 12, (r_star, r_hm)
+    assert 0 < r_star <= 12, r_star
     # the single-task union-find fast path (default threshold) agrees
-    fast, r_fast = connected_components_detail(df, algorithm="star")
+    fast, r_fast = connected_components_detail(df)
     assert r_fast == 0  # fast path taken
     assert {r["node_id"]: r["component"] for r in fast.collect()} == want
+
+
+# the path 0-1-2-3-4 closed by the chord 4-2: a triangle {2, 3, 4}
+# with a two-edge tail, so the peels keep a non-empty answer
+LOLLIPOP = {(0, 1), (1, 2), (2, 3), (3, 4), (4, 2)}
+
+
+def _cap_case(name, df, cap):
+    """Run one fixpoint operator with round cap ``cap``; return
+    ``(answer, expected)``."""
+    from online_centrality_spark.operators.components import (
+        connected_components_detail,
+    )
+    from online_centrality_spark.operators.kcore import k_core, k_truss
+    from online_centrality_spark.operators.scc import (
+        strongly_connected_components,
+    )
+
+    if name == "star_cc":
+        labels, rounds = connected_components_detail(
+            df, max_iter=cap, collect_threshold=0
+        )
+        got = {r["node_id"]: r["component"] for r in labels.collect()}
+        # the reported rounds include the confirming round R + 1
+        return (got, rounds), ({n: 0 for n in range(5)}, cap)
+    if name == "scc":
+        got = strongly_connected_components(df, inner_max_iter=cap)
+        return {r["node_id"]: r["component"] for r in got.collect()}, {
+            0: 0, 1: 1, 2: 2, 3: 2, 4: 2
+        }
+    if name == "k_core":
+        got = k_core(df, 2, max_rounds=cap)
+        return {r["node_id"]: r["core_degree"] for r in got.collect()}, {
+            2: 2, 3: 2, 4: 2
+        }
+    got = k_truss(df, 3, max_iter=cap)
+    return {(r["a"], r["b"]) for r in got.collect()}, {(2, 3), (2, 4), (3, 4)}
+
+
+@pytest.mark.parametrize(
+    "name, last_change",
+    [
+        # star CC reports 3 rounds: two contractions and the check
+        ("star_cc", 2),
+        # forward coloring reaches node 4 with color 0 in round 4
+        ("scc", 4),
+        # k = 2 peels edge 0-1, then edge 1-2
+        ("k_core", 2),
+        # k = 3 drops the two tail edges in round 1
+        ("k_truss", 1),
+    ],
+)
+def test_fixpoint_round_cap_boundary(spark, name, last_change):
+    """A fixpoint whose last changing round is R returns the answer at a
+    round cap of R + 1 and raises at R instead of truncating."""
+    df = to_df(spark, LOLLIPOP)
+    got, want = _cap_case(name, df, last_change + 1)
+    assert got == want
+    with pytest.raises(RuntimeError, match="no fixpoint after"):
+        _cap_case(name, df, last_change)
+
+
+def test_label_propagation_returns_at_round_cap(spark):
+    """LPA's contract is "at most max_iter rounds": at a cap below its
+    fixpoint it returns the capped labels (the oracle's unroll)."""
+    want = oracle_lpa(LOLLIPOP, max_iter=1)
+    assert want != oracle_lpa(LOLLIPOP, max_iter=2)  # the cap cuts
+    got = label_propagation(to_df(spark, LOLLIPOP), max_iter=1)
+    assert {r["node_id"]: r["label"] for r in got.collect()} == want
+
+
+def test_fixpoint_loops_release_cached_inputs(spark):
+    """The label loops and the bucketed-CC harness leave no cache
+    entries behind once their output is collected."""
+    from online_centrality_spark.operators.components import (
+        seeded_label_spreading,
+        threshold_profile,
+    )
+    from online_centrality_spark.operators.robustness import attack_robustness
+
+    spark.catalog.clearCache()
+    df = to_df(spark, LOLLIPOP)
+    seeds = spark.createDataFrame([(0, 7)], "node_id long, label long")
+    wdf = spark.createDataFrame(
+        [(a, b, float(a + b)) for a, b in sorted(LOLLIPOP)],
+        "src long, dst long, w double",
+    )
+    label_propagation(df).collect()
+    seeded_label_spreading(df, seeds).collect()
+    connected_components(df, collect_threshold=0).collect()
+    threshold_profile(wdf, [0.0, 5.0], collect_threshold=0).collect()
+    attack_robustness(df, max_remove=2, collect_threshold=0).collect()
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
 
 
 def test_weighted_harmonic_matches_dijkstra_oracle(spark):
