@@ -80,7 +80,7 @@ def ngram_jaccard_pairs(
     max_doc_freq: int | None = None,
 ) -> DataFrame:
     """(doc_a, doc_b, jaccard) for pairs with Jaccard >= threshold, a < b."""
-    sh = shingles(docs, text_col, id_col, n).persist()
+    sh = shingles(docs, text_col, id_col, n).localCheckpoint(eager=False)
     if max_doc_freq is not None:
         rare = (
             sh.groupBy("shingle_hash")
@@ -141,7 +141,7 @@ def ngram_containment_pairs(
     co-count row via an in-row two-struct explode — no second shuffle,
     no recomputed join subtree.
     """
-    sh = shingles(docs, text_col, id_col, n).persist()
+    sh = shingles(docs, text_col, id_col, n).localCheckpoint(eager=False)
     if max_doc_freq is not None:
         rare = (
             sh.groupBy("shingle_hash")
@@ -201,7 +201,7 @@ def doc_novelty(
     round(·, 6). Documents shorter than ``n`` tokens have no grams and
     are not emitted.
     """
-    sh = shingles(docs, text_col, id_col, n).persist()
+    sh = shingles(docs, text_col, id_col, n).localCheckpoint(eager=False)
     dfreq = sh.groupBy("shingle_hash").agg(F.count("*").alias("df"))
     return (
         sh.join(dfreq, "shingle_hash")
@@ -286,7 +286,7 @@ def dedup_threshold_profile(
     pair-bucket histogram, n_docs from the per-doc MAX-bucket
     histogram), so nothing after the pair stage is data-sized.
     """
-    sh = shingles(docs, text_col, id_col, n).persist()
+    sh = shingles(docs, text_col, id_col, n).localCheckpoint(eager=False)
     if max_doc_freq is not None:
         rare = (
             sh.groupBy("shingle_hash")
@@ -312,7 +312,7 @@ def dedup_threshold_profile(
             F.expr("CAST((10 * i) DIV (na + nb - i) AS LONG)").alias("bkt"),
         )
         .filter(F.col("bkt") >= 1)
-        .persist()
+        .localCheckpoint(eager=False)
     )
     ph = pb.groupBy("bkt").agg(F.count("*").alias("m"))
     dh = (

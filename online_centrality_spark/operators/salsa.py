@@ -16,19 +16,15 @@ Determinism / oracle parity: the update is linear with FIXED degree
 denominators, so running ``max_iter`` rounds unnormalized and applying
 one L1 normalization per vector at the end equals any per-step
 normalization schedule (scalars commute — the HITS/eigenvector
-argument). Mass never grows (each half-step redistributes, and only
-sink/source leakage removes mass), so the unnormalized loop is
-float-safe at fixed depth.
+argument). The engine rescales every round.
 
-Scale shape: degrees are two map-side-combinable groupBys computed
-once and ATTACHED to the persisted edge list up front (so no
-per-iteration degree join); every half-step is one equi-join of the
-score vector against the weighted edge list plus a map-side
-groupBy-sum; the two half-steps of a round run as ONE job (only ``h``
-is checkpointed per round — lineage depth stays O(1), job count and
-checkpoint I/O are halved vs checkpointing each half-step); the end
-normalizers attach as 1-row broadcast cross joins. No driver-side
-state, no windows, no collects.
+Scale shape: SALSA is the two-push variant of the power step in
+:mod:`.static_pagerank` with ``W(u)`` the out-weight along each push
+(the out-degree forward, the in-degree along the reversed edges), no
+bias and start ``1/n``. It runs that module's distributed loop only
+(``collect_threshold=0``, as ``pagerank_convergence`` does): per round
+two push joins with map-side groupBy-sums, one lazy lineage cut
+and one stats collect, whose vector sums rescale the next round.
 """
 
 from __future__ import annotations
@@ -36,74 +32,15 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .static_pagerank import _Power, _dedup, _power
+
 
 def salsa(edges: DataFrame, max_iter: int = 12) -> DataFrame:
     """(node_id, hub, authority) after ``max_iter`` SALSA rounds,
     each vector L1-normalized at the end; nodes the walk never reaches
     on a side carry 0.0 there."""
-    p = (
-        edges.select("src", "dst")
-        .filter(F.col("src") != F.col("dst"))
-        .distinct()
-        .persist()
+    p = _Power(
+        max_iter, out_weight=True, rescale=True, cols=("authority", "hub")
     )
-    nodes = (
-        p.select(F.col("src").alias("node_id"))
-        .unionAll(p.select(F.col("dst").alias("node_id")))
-        .distinct()
-        .persist()
-    )
-    outd = p.groupBy(F.col("src").alias("node_id")).agg(
-        F.count("*").alias("deg")
-    )
-    ind = p.groupBy(F.col("dst").alias("node_id")).agg(
-        F.count("*").alias("deg")
-    )
-    # pre-weighted edge list: both degree denominators ride along, so
-    # the iteration never re-joins the degree tables (division stays
-    # v / deg — identical float arithmetic to the unrolled oracle)
-    pw = (
-        p.join(outd.select(F.col("node_id").alias("src"),
-                           F.col("deg").alias("od")), "src")
-        .join(ind.select(F.col("node_id").alias("dst"),
-                         F.col("deg").alias("id_")), "dst")
-        .select("src", "dst", "od", "id_")
-        .localCheckpoint(eager=True)
-    )
-    h = nodes.select("node_id", F.lit(1.0).alias("v")).localCheckpoint(
-        eager=True
-    )
-    a = None
-    for i in range(max_iter):
-        a = (
-            pw.join(
-                h.select(F.col("node_id").alias("src"), "v"), "src"
-            )
-            .groupBy(F.col("dst").alias("node_id"))
-            .agg(F.sum(F.col("v") / F.col("od")).alias("v"))
-        )
-        if i == max_iter - 1:
-            # the final authority vector feeds the output join twice;
-            # pin it so it is not recomputed per consumer
-            a = a.localCheckpoint(eager=True)
-        h = (
-            pw.join(
-                a.select(F.col("node_id").alias("dst"), "v"), "dst"
-            )
-            .groupBy(F.col("src").alias("node_id"))
-            .agg(F.sum(F.col("v") / F.col("id_")).alias("v"))
-            .localCheckpoint(eager=True)
-        )
-    h_tot = h.agg(F.sum("v").alias("hs"))
-    a_tot = a.agg(F.sum("v").alias("as_"))
-    return (
-        nodes.join(h.withColumnRenamed("v", "_h"), "node_id", "left")
-        .join(a.withColumnRenamed("v", "_a"), "node_id", "left")
-        .crossJoin(F.broadcast(h_tot))
-        .crossJoin(F.broadcast(a_tot))
-        .select(
-            "node_id",
-            (F.coalesce("_h", F.lit(0.0)) / F.col("hs")).alias("hub"),
-            (F.coalesce("_a", F.lit(0.0)) / F.col("as_")).alias("authority"),
-        )
-    )
+    g = _dedup(edges.filter(F.col("src") != F.col("dst")))
+    return _power(g, None, p, 0)[0].select("node_id", "hub", "authority")

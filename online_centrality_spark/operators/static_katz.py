@@ -2,34 +2,47 @@
 
 Reference semantics (``concept_drift/experiment_utils.py:21-43``): column
 sums of ``sum_i (alpha * A)^i`` — equivalently the iteration
-``k <- alpha * A^T k + alpha * 1`` started from ``alpha * 1`` — with a
-divergence guard ``alpha < 1 / lambda_max`` (``get_1_per_lambda``,
-``experiment_utils.py:14-19``) and a mean-absolute-delta stopping rule.
-Optionally binarized (dedup) weights, matching the reference's
-``binary=True`` default.
+``k <- alpha * A^T k + alpha * indeg`` started from its first term
+``alpha * indeg`` — with a divergence guard ``alpha < 1 / lambda_max``
+(``get_1_per_lambda``, ``experiment_utils.py:14-19``) and a
+mean-absolute-delta stopping rule. Optionally binarized (dedup)
+weights, matching the reference's ``binary=True`` default.
 
 Used by the reference only as a concept-drift ground truth; here it is a
-first-class operator with the same two physical strategies as static
-PageRank: a compact single-task numpy path for small graphs and an
-iterative join-aggregate path (lineage cut per iteration) for large
-ones. Multi-edge weights: ``weighted=True`` keeps parallel-edge
-multiplicity as the A entry; default binarizes.
+first-class operator. Multi-edge weights: ``weighted=True`` keeps
+parallel-edge multiplicity as the A entry; default binarizes.
+
+Scale design: that iteration is the one-push variant of the power step
+in :mod:`.static_pagerank` with ``W = 1`` and the bias ``alpha *
+indeg``, so Katz shares that module's compact numpy kernel below
+``collect_threshold`` nodes and its distributed loop (one push join,
+one lazy lineage cut and one stats collect per round). Both
+paths return every node of src ∪ dst (0.0 where no walk ends), stop
+when a term's mean absolute value drops below ``tol`` or the term is
+all zero (a DAG runs out of walks), and raise ``RuntimeError`` when
+``max_iter`` terms do not get there.
 """
 
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
-_SCHEMA = T.StructType(
-    [
-        T.StructField("node_id", T.LongType(), False),
-        T.StructField("score", T.DoubleType(), False),
-    ]
-)
+from .static_pagerank import _Power, _power, _power_numpy
+
+# the least positive double: an L1 change below it is exactly zero
+_ZERO_TERM = float(np.nextafter(0.0, 1.0))
+
+
+def _katz_spec(alpha, max_iter, tol) -> _Power:
+    return _Power(
+        max_iter, alpha, const=1.0, in_bias=alpha,
+        stop=lambda n: max(n * tol, _ZERO_TERM),
+        error=RuntimeError(
+            f"katz series did not converge (alpha={alpha} too large?)"
+        ),
+    )
 
 
 def katz_numpy(
@@ -42,28 +55,13 @@ def katz_numpy(
 ) -> tuple[np.ndarray, np.ndarray]:
     """Reference-faithful series on edge arrays: score = column sums of
     ``sum_i (alpha A)^i`` (walks ENDING at the node)."""
-    nodes = np.unique(np.concatenate([src, dst]))
-    n = len(nodes)
-    s = np.searchsorted(nodes, src)
-    d = np.searchsorted(nodes, dst)
-    w = np.ones(len(s))
     if not weighted:
         # binarize parallel edges
-        key = s.astype(np.int64) * n + d
-        _, first = np.unique(key, return_index=True)
-        s, d = s[first], d[first]
-        w = np.ones(len(s))
-    term = np.zeros(n)
-    np.add.at(term, d, alpha * w)  # (alpha A)^1 column sums
-    total = term.copy()
-    for _ in range(max_iter):
-        nxt = np.zeros(n)
-        np.add.at(nxt, d, alpha * w * term[s])
-        total += nxt
-        if np.abs(nxt).mean() < tol:
-            return nodes, total
-        term = nxt
-    raise RuntimeError(f"katz series did not converge (alpha={alpha} too large?)")
+        src, dst = np.unique(np.stack([src, dst], axis=1), axis=0).T
+    nodes, (score,) = _power_numpy(
+        src, dst, np.ones(len(src)), None, _katz_spec(alpha, max_iter, tol)
+    )
+    return nodes, score
 
 
 def static_katz(
@@ -75,61 +73,10 @@ def static_katz(
     collect_threshold: int = 100_000,
 ) -> DataFrame:
     """(node_id, score) static Katz on the (optionally binarized) graph."""
-    sel = edges.select("src", "dst")
+    g = edges.select("src", "dst")
     if not weighted:
-        sel = sel.dropDuplicates(["src", "dst"])
-    n_nodes = (
-        sel.select(F.col("src").alias("n"))
-        .unionAll(sel.select(F.col("dst").alias("n")))
-        .distinct()
-        .count()
-    )
-    if n_nodes == 0:
-        return edges.sparkSession.createDataFrame([], _SCHEMA)
-    if n_nodes <= collect_threshold:
-        def kernel(batches):
-            chunks = [p for p in batches if len(p)]
-            if not chunks:
-                return
-            pdf = pd.concat(chunks, ignore_index=True)
-            nodes, scores = katz_numpy(
-                pdf["src"].to_numpy(np.int64),
-                pdf["dst"].to_numpy(np.int64),
-                alpha,
-                max_iter,
-                tol,
-                weighted=True,  # dedup already applied above if needed
-            )
-            yield pd.DataFrame({"node_id": nodes.astype(np.int64), "score": scores})
-
-        return sel.coalesce(1).mapInPandas(kernel, schema=_SCHEMA)
-    # distributed: term/total DataFrames, one shuffle per series term
-    spark = edges.sparkSession
-    sel = sel.persist()
-    term = (
-        sel.groupBy(F.col("dst").alias("node_id"))
-        .agg((F.count("*") * alpha).alias("term"))
-    ).localCheckpoint(eager=True)
-    total = term.withColumnRenamed("term", "score")
-    for _ in range(max_iter):
-        nxt = (
-            sel.join(term, sel["src"] == term["node_id"])
-            .groupBy(F.col("dst").alias("node_id"))
-            .agg((F.sum("term") * alpha).alias("term"))
-        ).localCheckpoint(eager=True)
-        delta_sum = nxt.agg(F.sum(F.abs(F.col("term")))).collect()[0][0] or 0.0
-        total = (
-            total.join(nxt, "node_id", "outer")
-            .select(
-                "node_id",
-                (
-                    F.coalesce(F.col("score"), F.lit(0.0))
-                    + F.coalesce(F.col("term"), F.lit(0.0))
-                ).alias("score"),
-            )
-        ).localCheckpoint(eager=True)
-        n_active = nxt.count()
-        if n_active == 0 or delta_sum / max(n_nodes, 1) < tol:
-            return total
-        term = nxt
-    raise RuntimeError(f"katz series did not converge (alpha={alpha} too large?)")
+        g = g.dropDuplicates(["src", "dst"])
+    return _power(
+        g.withColumn("w", F.lit(1.0)), None,
+        _katz_spec(alpha, max_iter, tol), collect_threshold,
+    )[0]

@@ -44,8 +44,8 @@ def add_global_seq(
         df.repartitionByRange(num_partitions, *order_cols)
         .sortWithinPartitions(*order_cols)
         .withColumn("_pid", F.spark_partition_id())
+        .localCheckpoint(eager=False)
     )
-    sdf.persist()
     counts = {
         row["_pid"]: row["cnt"]
         for row in sdf.groupBy("_pid").agg(F.count("*").alias("cnt")).collect()
@@ -103,8 +103,8 @@ def per_key_rank(
         df.repartitionByRange(num_partitions, *cols)
         .sortWithinPartitions(*cols)
         .withColumn("_pid", F.spark_partition_id())
+        .localCheckpoint(eager=False)
     )
-    sdf.persist()
     cnt = sdf.groupBy("_pid", *key_cols).agg(F.count("*").alias("_n"))
     spanning = (
         cnt.groupBy(*key_cols)
@@ -217,8 +217,7 @@ def _induce_edges(
             raw.select(F.col("dst_actor").alias("actor"))
         ),
         "actor",
-    )
-    nodes.persist()
+    ).localCheckpoint(eager=False)
     enc = (
         raw.join(
             F.broadcast(nodes.withColumnRenamed("actor", "src_actor")).withColumnRenamed(

@@ -5,6 +5,7 @@ import re
 import numpy as np
 import pandas as pd
 import pytest
+from pyspark.sql import functions as F
 
 from online_centrality_spark.operators.components import (
     connected_components,
@@ -310,6 +311,104 @@ def test_static_katz_matches_dense_series(spark):
             )
 
 
+@pytest.mark.parametrize("threshold", [100_000, 0])  # compact, distributed
+def test_static_katz_keeps_every_node_and_stops_on_a_zero_term(
+    spark, threshold
+):
+    """Both paths return every node of src ∪ dst (0.0 where no walk
+    ends), and a series whose next term is all zero (a DAG) returns at
+    tol=0 instead of raising."""
+    from online_centrality_spark.operators.static_katz import static_katz
+
+    def run(pairs, **kw):
+        out = static_katz(
+            to_df(spark, pairs), alpha=0.1, collect_threshold=threshold, **kw
+        )
+        return as_map(out)
+
+    a = 0.1
+    # node 0 has no in-edge; k_v = sum_{u->v} a (1 + k_u) gives
+    # k1 = 2a + a k2 and k2 = a + a k1
+    got = run({(0, 1), (1, 2), (2, 1)})
+    k1 = (2 * a + a * a) / (1 - a * a)
+    assert got == pytest.approx({0: 0.0, 1: k1, 2: a + a * k1}, abs=1e-9)
+    # the DAG 0 -> 1 -> 2 runs out of walks after two terms
+    got = run({(0, 1), (1, 2)}, tol=0.0)
+    assert got == pytest.approx({0: 0.0, 1: a, 2: a + a * a}, abs=1e-15)
+
+
+def _hits_oracle(pairs, max_iter, tol):
+    """Dense HITS, L1-normalized each round: (round it stops at, hubs,
+    authorities)."""
+    nodes = sorted({v for p in pairs for v in p})
+    ix = {v: i for i, v in enumerate(nodes)}
+    adj = np.zeros((len(nodes), len(nodes)))
+    for s, d in pairs:
+        adj[ix[s], ix[d]] = 1.0
+    h, a = np.full(len(nodes), 1.0 / len(nodes)), np.zeros(len(nodes))
+    for rnd in range(1, max_iter + 1):
+        a_new = adj.T @ h
+        h_new = adj @ a_new
+        a_new, h_new = a_new / a_new.sum(), h_new / h_new.sum()
+        delta = np.abs(h_new - h).sum() + np.abs(a_new - a).sum()
+        h, a = h_new, a_new
+        if delta < tol:
+            break
+    return rnd, dict(zip(nodes, h)), dict(zip(nodes, a))
+
+
+_KATZ_CAP = {(0, 1), (1, 2), (2, 0), (2, 3), (3, 1)}
+
+
+@pytest.mark.parametrize(
+    "case", ["katz-compact", "katz-distributed", "hits-distributed"]
+)
+def test_power_family_stop_and_cap_boundary(spark, case):
+    """The shared power loop stops where its kernel does. Static Katz on
+    _KATZ_CAP (alpha=0.1, tol=1e-6) converges in round 6: a cap of 5
+    raises, a cap of 6 returns, on both paths. Distributed HITS with
+    tol > 0 stops at the oracle's round with the oracle's vectors, as
+    the compact kernel does."""
+    import random
+
+    from online_centrality_spark.operators import hits
+    from online_centrality_spark.operators.static_katz import (
+        katz_numpy,
+        static_katz,
+    )
+
+    if case.startswith("katz"):
+        threshold = 100_000 if case == "katz-compact" else 0
+        edges = to_df(spark, _KATZ_CAP)
+        kw = dict(alpha=0.1, tol=1e-6, collect_threshold=threshold)
+        with pytest.raises(Exception, match="katz series did not converge"):
+            static_katz(edges, max_iter=5, **kw).collect()
+        got = as_map(static_katz(edges, max_iter=6, **kw))
+        src, dst = (np.array(c) for c in zip(*sorted(_KATZ_CAP)))
+        nodes, want = katz_numpy(src, dst, 0.1, max_iter=6, tol=1e-6)
+        assert got == pytest.approx(dict(zip(nodes.tolist(), want)), abs=1e-12)
+        return
+    rng = random.Random(7)  # the test_hits_distributed_matches_compact graph
+    pairs = list({(rng.randrange(30), rng.randrange(30)) for _ in range(150)})
+    pairs = [(s, d) for s, d in pairs if s != d]
+    rnd, want_h, want_a = _hits_oracle(pairs, 50, 1e-6)
+    assert rnd == 17  # stops well before the cap
+    prev_h = _hits_oracle(pairs, rnd - 1, 0.0)[1]
+    assert max(abs(prev_h[v] - want_h[v]) for v in want_h) > 1e-9
+    edges = spark.createDataFrame(pairs, "src long, dst long")
+    for threshold in (100_000, 0):
+        got = {
+            r["node_id"]: (r["hub"], r["authority"])
+            for r in hits(
+                edges, max_iter=50, tol=1e-6, collect_threshold=threshold
+            ).collect()
+        }
+        assert got.keys() == want_h.keys()
+        for v in got:
+            assert got[v][0] == pytest.approx(want_h[v], abs=1e-12)
+            assert got[v][1] == pytest.approx(want_a[v], abs=1e-12)
+
+
 def test_cc_star_vs_hashmin_and_round_count(spark):
     """The star contraction agrees with the oracle and converges in
     O(log n) rounds on a long path (diameter 119), where one-hop label
@@ -425,6 +524,49 @@ def test_fixpoint_loops_release_cached_inputs(spark):
     connected_components(df, collect_threshold=0).collect()
     threshold_profile(wdf, [0.0, 5.0], collect_threshold=0).collect()
     attack_robustness(df, max_remove=2, collect_threshold=0).collect()
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
+def test_power_loop_and_sources_release_cached_inputs(spark):
+    """The five power-family operators on the distributed loop, the
+    global and per-key rank helpers, event edge induction and n-gram
+    Jaccard leave no cache entries behind once their output is
+    collected."""
+    from online_centrality_spark.dedup.ngram import ngram_jaccard_pairs
+    from online_centrality_spark.operators import hits
+    from online_centrality_spark.operators.eigenvector import (
+        eigenvector_centrality,
+    )
+    from online_centrality_spark.operators.salsa import salsa
+    from online_centrality_spark.operators.static_katz import static_katz
+    from online_centrality_spark.sources.edges import (
+        add_global_seq,
+        edges_from_events,
+        per_key_rank,
+    )
+
+    spark.catalog.clearCache()
+    df = to_df(spark, LOLLIPOP)
+    static_pagerank(df, max_iter=2, strict=False, collect_threshold=0).collect()
+    hits(df, max_iter=2, collect_threshold=0).collect()
+    eigenvector_centrality(df, max_iter=2, collect_threshold=0).collect()
+    static_katz(df, alpha=0.1, tol=1e-3, collect_threshold=0).collect()
+    salsa(df, max_iter=2).collect()
+    add_global_seq(df, ["src", "dst"]).collect()
+    per_key_rank(df, ["src"], ["dst"]).collect()
+    events = spark.createDataFrame(
+        [(1, "2024-01-01 00:00:00", 7, "a"), (2, "2024-01-01 00:00:01", 7, "b"),
+         (3, "2024-01-01 00:00:02", 7, "a")],
+        "event_id long, ts string, user_id long, event_type string",
+    ).withColumn("ts", F.col("ts").cast("timestamp"))
+    edges, nodes = edges_from_events(events)
+    edges.collect()
+    nodes.collect()
+    docs = spark.createDataFrame(
+        [(1, "the quick brown fox jumps"), (2, "the quick brown fox sleeps")],
+        "doc_id long, text string",
+    )
+    ngram_jaccard_pairs(docs, n=2, threshold=0.1).collect()
     assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
 
 

@@ -4,7 +4,9 @@ Runs every ``queries()`` entry on Spark and its ``oracle_sql()`` twin on
 DuckDB over the same sf dir, then compares row count, column names, and
 an order-insensitive value hash. Each query's Spark side runs under its
 own job group, and its ``ok``/``FAIL`` line ends with ``jobs=<n>``, the
-number of Spark jobs that group ran. Usage:
+number of Spark jobs that group ran. The cache is cleared before each
+query, so a count does not depend on the order the queries run in.
+Usage:
 
     python tools/verify_entry.py [sf_dir] [query ...]
 """
@@ -62,6 +64,9 @@ def main():
         if only and name not in only:
             continue
         t0 = time.time()
+        # an entry an earlier query left cached would hide this query's
+        # own jobs, so every count starts from an empty cache
+        spark.catalog.clearCache()
         sc.setJobGroup(name, name)
         try:
             got = fn(spark, sf_dir).toPandas()
