@@ -1783,14 +1783,14 @@ def q_negative_beta_total(spark, sf_dir):
 
 def _did_scores(spark, sf_dir):
     from online_centrality_spark.functions.weights import ExponentialWeighter
-    from online_centrality_spark.operators.decayed_indegree import DecayedIndegree
+    from online_centrality_spark.operators import DistributedDecayedIndegree
 
     edges, _ = _event_edges(spark, sf_dir)
-    t_max = edges.agg(F.max("t")).collect()[0][0]
-    did = DecayedIndegree([ExponentialWeighter(norm=NORM_US, base=0.5)], spark)
-    did.superstep(edges.withColumn("key", F.col("t").cast("double")))
-    # read-out stays a DataFrame end-to-end (no driver bounce)
-    return did.readout_df(float(t_max)).select("node_id", "score")
+    t_max = float(edges.agg(F.max("t")).collect()[0][0])
+    did = DistributedDecayedIndegree([ExponentialWeighter(norm=NORM_US, base=0.5)])
+    e = edges.withColumn("key", F.col("t").cast("double"))
+    ro = did.run_batch(e.withColumn("interval_id", F.lit(0)), [(0, t_max, t_max)])
+    return ro.select("node_id", "score")
 
 
 def q_decayed_indegree(spark, sf_dir):
@@ -1885,8 +1885,8 @@ def q_temporal_katz(spark, sf_dir):
         n_nodes,
         path="walk",
     )
-    tk.superstep(edges.withColumn("key", F.col("t").cast("double")), t_max)
-    out = tk.readout(t_max)[["node_id", "score"]].copy()
+    e = edges.withColumn("key", F.col("t").cast("double"))
+    out = tk.run_batch(e, [(0, t_max, t_max)])[0][["node_id", "score"]].copy()
     out["score"] = out["score"].round(6)
     return spark.createDataFrame(out)
 
@@ -3868,10 +3868,8 @@ def q_spam_mass(spark, sf_dir):
     from online_centrality_spark.operators import personalized_pagerank
     from online_centrality_spark.operators.static_pagerank import static_pagerank
 
-    # ONE persisted supplier->customer edge frame feeds both unrolled
-    # PR runs (VERDICT r04 #7: the two queries each rebuilt the
-    # lineitem |x| orders join); score columns stay bit-identical to
-    # q_static_pagerank / q_personalized_pagerank
+    # ONE cached supplier->customer edge frame feeds both PR runs (VERDICT
+    # r04 #7); each run checkpoints its own copy, so it is freed after both
     li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
     orders = _t(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
     e = (
@@ -3892,6 +3890,7 @@ def q_spam_mass(spark, sf_dir):
     ppr = personalized_pagerank(
         e, seeds, alpha=0.85, max_iter=PR_ITERS, tol=0.0, strict=False
     )
+    e.unpersist()
     trust = ppr.select("node_id", F.round("score", 9).alias("trust"))
     return pr.join(trust, "node_id").select(
         "node_id",
@@ -4978,7 +4977,7 @@ def q_rank_overlap(spark, sf_dir):
             F.col("l_suppkey").alias("src"),
             (F.lit(100000) + F.col("o_custkey")).alias("dst"),
         )
-        .persist()
+        .localCheckpoint(eager=False)
     )
     pr = static_pagerank(
         e, alpha=0.85, max_iter=PR_ITERS, tol=0.0, strict=False

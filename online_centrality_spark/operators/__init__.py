@@ -5,7 +5,7 @@ from .components import (
     seeded_label_spreading,
     threshold_profile,
 )
-from .decayed_indegree import DecayedIndegree, DistributedDecayedIndegree
+from .decayed_indegree import DistributedDecayedIndegree
 from .static_degree import static_indegree, static_negative_beta
 from .static_pagerank import (
     pagerank_convergence,
@@ -65,7 +65,6 @@ __all__ = [
     "DistributedTruncatedTemporalKatz",
     "attach_closure_components",
     "DistributedTemporalPageRank",
-    "DecayedIndegree",
     "DistributedDecayedIndegree",
     "static_indegree",
     "static_negative_beta",

@@ -80,8 +80,6 @@ def _bfs_forest(adj: DataFrame, roots: DataFrame, max_rounds: int):
     frontier = visited.select("node_id")
     max_depth = 0
     for r in range(1, max_rounds + 1):
-        if frontier.isEmpty():
-            return visited, max_depth
         nxt = (
             adj.join(
                 frontier.withColumnRenamed("node_id", "src"), "src"
@@ -89,15 +87,17 @@ def _bfs_forest(adj: DataFrame, roots: DataFrame, max_rounds: int):
             .groupBy(F.col("dst").alias("node_id"))
             .agg(F.min("src").alias("parent"))
             .join(visited.select("node_id"), "node_id", "left_anti")
-            .localCheckpoint(eager=True)
+            .localCheckpoint(eager=False)
         )
-        if nxt.isEmpty():
+        # one action per round: the row count materializes the lazy
+        # checkpoint (and ``visited``'s) and is the stop test
+        if nxt.count() == 0:
             return visited, max_depth
         visited = visited.unionByName(
             nxt.select(
                 "node_id", F.lit(r).cast("long").alias("depth"), "parent"
             )
-        ).localCheckpoint(eager=True)
+        ).localCheckpoint(eager=False)
         frontier = nxt.select("node_id")
         max_depth = r
     raise RuntimeError(f"bridges BFS did not saturate in {max_rounds} rounds")
@@ -110,7 +110,6 @@ def _lift_tables(tree: DataFrame, max_depth: int) -> list[DataFrame]:
         .select(
             F.col("node_id").alias("node"), F.col("parent").alias("anc")
         )
-        .persist()
     ]
     k = 1
     while (1 << k) <= max_depth:
@@ -122,7 +121,7 @@ def _lift_tables(tree: DataFrame, max_depth: int) -> list[DataFrame]:
                 F.col("lo.node").alias("node"),
                 F.col("hi.anc").alias("anc"),
             )
-            .persist()
+            .localCheckpoint(eager=False)
         )
         tables.append(nxt)
         k += 1
@@ -264,7 +263,7 @@ def _forest_analysis(edges: DataFrame, max_rounds: int):
         )
         .filter(F.col("a") != F.col("b"))
         .distinct()
-        .persist()
+        .localCheckpoint(eager=False)
     )
     if e.isEmpty():
         return None
@@ -273,7 +272,6 @@ def _forest_analysis(edges: DataFrame, max_rounds: int):
         .unionAll(
             e.select(F.col("b").alias("src"), F.col("a").alias("dst"))
         )
-        .persist()
     )
     from .components import connected_components
 
@@ -282,7 +280,6 @@ def _forest_analysis(edges: DataFrame, max_rounds: int):
     )
     roots = comp.select(F.col("component").alias("node_id")).distinct()
     tree, max_depth = _bfs_forest(adj, roots, max_rounds)
-    tree = tree.persist()
     tree_edges = (
         tree.filter(F.col("parent").isNotNull())
         .select(
@@ -291,7 +288,6 @@ def _forest_analysis(edges: DataFrame, max_rounds: int):
             F.col("node_id").alias("child"),
             F.col("depth").alias("child_depth"),
         )
-        .persist()
     )
     nte = e.join(tree_edges.select("a", "b"), ["a", "b"], "left_anti")
     tables = _lift_tables(tree, max(max_depth, 1))
@@ -389,7 +385,6 @@ def articulation_points(
     children = (
         tree.filter(F.col("parent").isNotNull())
         .select(F.col("parent").alias("c"), F.col("node_id").alias("ch"))
-        .persist()
     )
     glabel = None
     if fa["lca_pairs"] is not None:
@@ -421,7 +416,7 @@ def articulation_points(
             F.col("lca").alias("bkt"),
             F.col("chu").alias("src"),
             F.col("chv").alias("dst"),
-        ).persist()
+        ).localCheckpoint(eager=False)
         if not cg_edges.isEmpty():
             # one stripe-encoded star-CC run over ALL per-vertex child
             # graphs (the bucketed_component_sizes encoding)
@@ -513,7 +508,7 @@ def two_edge_components(
         )
         .filter(F.col("a") != F.col("b"))
         .distinct()
-        .persist()
+        .localCheckpoint(eager=False)
     )
     if e.isEmpty():
         return spark.createDataFrame([], "node_id long, component long")

@@ -1,4 +1,4 @@
-"""Decayed indegree (online) as incremental DataFrame state + aggregation.
+"""Decayed indegree (online): one distributed engine over per-edge state.
 
 Reference semantics (``decayed_indegree_computer.py:36-87``, with the
 ``batch_score_part=""`` path — the only one exercised by the shipped
@@ -11,138 +11,22 @@ At snapshot read-out time T, the score of every ever-active node v is
                   of weight(T - last_activation(w, v))
 
 where last_activation of an edge is the last time it appeared. Unlike
-Temporal Katz this is order-free — a pure aggregation over per-edge
-state — so it is fully distributed: edge state is a DataFrame
-``(src, dst, last_key)`` merged per superstep (groupBy max), and read-out
-is one groupBy-sum with the decay as a JVM column expression (no Python
-in the hot path). Hub skew on ``dst`` is handled by Spark's two-stage
-(partial) aggregation + AQE.
+Temporal Katz this is order-free — one incremental window aggregate
+over per-edge state — so it is fully distributed, and
+:class:`DistributedDecayedIndegree` is its only engine: edge state is a
+DataFrame ``(src, dst, last_key)``, advanced and read out for a whole
+chunk of snapshot intervals by ``run_batch`` (a one-off read-out is a
+one-interval chunk), with the decay as a JVM column expression (no
+Python in the hot path). Hub skew on ``dst`` is handled by Spark's
+two-stage (partial) aggregation + AQE.
 """
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.weights import Weighter
-
-
-class DecayedIndegree:
-    measure = "did"
-
-    def __init__(self, params: list[Weighter], spark, checkpoint_every: int = 8):
-        self.params = params
-        self.spark = spark
-        self.checkpoint_every = checkpoint_every
-        self.reset()
-
-    def reset(self) -> None:
-        self.edge_state: DataFrame | None = None  # (src, dst, last_key)
-        self.active: DataFrame | None = None  # (node_id)
-        self._steps = 0
-
-    @property
-    def param_ids(self) -> list[str]:
-        return ["did_%s" % w for w in self.params]
-
-    def superstep(self, window: DataFrame | None, hi: float | None = None) -> None:
-        if window is None:
-            return
-        win_last = window.groupBy("src", "dst").agg(F.max("key").alias("last_key"))
-        win_active = (
-            window.select(F.col("src").alias("node_id"))
-            .unionAll(window.select(F.col("dst").alias("node_id")))
-            .distinct()
-        )
-        if self.edge_state is None:
-            self.edge_state = win_last
-            self.active = win_active
-        else:
-            self.edge_state = (
-                self.edge_state.unionByName(win_last)
-                .groupBy("src", "dst")
-                .agg(F.max("last_key").alias("last_key"))
-            )
-            self.active = self.active.unionByName(win_active).distinct()
-        self._steps += 1
-        if self._steps % self.checkpoint_every == 0:
-            # cut lineage so the per-superstep plan doesn't grow unboundedly
-            self.edge_state = self.edge_state.localCheckpoint(eager=True)
-            self.active = self.active.localCheckpoint(eager=True)
-
-    def readout_df(self, boundary: float) -> DataFrame | None:
-        """Tidy (param_id, node_id, score) as a DataFrame — the canonical
-        plan: read-out stays distributed (one groupBy-sum with the decay
-        as a JVM column expression + a left join against the active set);
-        None when no superstep has run."""
-        if self.edge_state is None:
-            return None
-        aggs = [
-            F.sum(w.weight_col(F.lit(float(boundary)) - F.col("last_key"))).alias(
-                f"s{i}"
-            )
-            for i, w in enumerate(self.params)
-        ]
-        in_scores = self.edge_state.groupBy("dst").agg(*aggs)
-        joined = (
-            self.active.join(
-                in_scores, self.active["node_id"] == in_scores["dst"], "left"
-            )
-            .drop("dst")
-            .fillna(0.0)
-        )
-        parts = [
-            joined.select(
-                F.lit(pid).alias("param_id"),
-                "node_id",
-                F.col(f"s{i}").alias("score"),
-            )
-            for i, pid in enumerate(self.param_ids)
-        ]
-        out = parts[0]
-        for df in parts[1:]:
-            out = out.unionByName(df)
-        return out
-
-    def readout(self, boundary: float) -> pd.DataFrame:
-        if self.edge_state is None:
-            return pd.DataFrame(columns=["param_id", "node_id", "score"])
-        aggs = [
-            F.sum(w.weight_col(F.lit(float(boundary)) - F.col("last_key"))).alias(
-                f"s{i}"
-            )
-            for i, w in enumerate(self.params)
-        ]
-        in_scores = self.edge_state.groupBy("dst").agg(*aggs)
-        joined = (
-            self.active.join(
-                in_scores, self.active["node_id"] == in_scores["dst"], "left"
-            )
-            .drop("dst")
-            .fillna(0.0)
-            .toPandas()
-        )
-        frames = []
-        for i, pid in enumerate(self.param_ids):
-            frames.append(
-                pd.DataFrame(
-                    {
-                        "param_id": pid,
-                        "node_id": joined["node_id"].to_numpy(),
-                        "score": joined[f"s{i}"].to_numpy(),
-                    }
-                )
-            )
-        return pd.concat(frames, ignore_index=True)
-
-    # state persistence handled by the superstep driver via parquet
-    def state_frames(self) -> dict[str, DataFrame | None]:
-        return {"edge_state": self.edge_state, "active": self.active}
-
-    def load_state_frames(self, edge_state: DataFrame | None, active: DataFrame | None):
-        self.edge_state = edge_state
-        self.active = active
 
 
 class DistributedDecayedIndegree:
@@ -197,20 +81,6 @@ class DistributedDecayedIndegree:
     @property
     def param_ids(self) -> list[str]:
         return ["did_%s" % w for w in self.params]
-
-    def can_batch(self) -> bool:
-        return True
-
-    def superstep(self, window: DataFrame | None, hi: float) -> None:
-        if window is None:
-            return
-        # single-window path: rebase the window's interval id to 0 so the
-        # segment ranges line up with the one-interval pseudo chunk
-        self.run_batch(
-            window.withColumn("interval_id", F.lit(0).cast("int")),
-            [(0, float(hi), float(hi))],
-            readouts=False,
-        )
 
     def run_batch(
         self,
@@ -341,33 +211,6 @@ class DistributedDecayedIndegree:
             "node_id",
             "score",
         )
-
-    def readout_df(self, boundary: float) -> DataFrame | None:
-        """Scores at an arbitrary boundary from the carried state (same
-        formula as the driver-state variant's canonical plan)."""
-        if self.edge_state is None:
-            return None
-        aggs = [
-            F.sum(
-                wf.weight_col(F.lit(float(boundary)) - F.col("last_key"))
-            ).alias(f"s{i}")
-            for i, wf in enumerate(self.params)
-        ]
-        in_scores = self.edge_state.groupBy("dst").agg(*aggs)
-        joined = (
-            self.active.join(
-                in_scores, self.active["node_id"] == in_scores["dst"], "left"
-            )
-            .drop("dst")
-            .fillna(0.0)
-        )
-        pid_arr = F.array(*[F.lit(p) for p in self.param_ids])
-        return joined.select(
-            "node_id",
-            F.posexplode(
-                F.array(*[F.col(f"s{i}") for i in range(self.p)])
-            ).alias("pos", "score"),
-        ).select(pid_arr[F.col("pos")].alias("param_id"), "node_id", "score")
 
     def release(self) -> None:
         if self._seg_cached is not None:

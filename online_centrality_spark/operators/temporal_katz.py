@@ -14,12 +14,16 @@ cannot be one big commutative aggregation. Two exact execution paths:
 - **fold** (any weighter): the window's edges, sorted by the stable
   global rank ``seq``, stream through one Arrow ``mapInPandas`` task that
   keeps the dense ``(P, N)`` rank matrix and applies the recurrence with
-  O(P) vector ops per edge.
+  O(P) vector ops per edge. It advances one window per ``superstep`` and
+  reads out per boundary with ``readout``, decaying each node from its
+  own last activation.
 
 - **walk** (factorizing weighters; the SCALE path): vectorized Jacobi
   path-length iteration with segmented prefix sums over chain-closed
   partitions — any node count, numerically stable, one Spark job per
-  replay batch. See ``walk.py``.
+  replay batch. See ``walk.py``. It advances and reads out only through
+  ``run_batch``, whatever the number of windows: its state sits at one
+  decay basis, so the fold read-out formula does not apply to it.
 
 State lives on the driver as O(N*P) numpy arrays between supersteps
 (broadcast into tasks), checkpointed by the superstep driver.
@@ -65,6 +69,10 @@ class TemporalKatz:
     None = one task; 'preserve' = trust the df's partitioning to be
     node-disjoint; or a column name to repartition by a node-disjoint
     closure key such as a component id).
+
+    A fold-path instance advances per window with ``superstep`` and reads
+    out with ``readout``; a walk-path instance has only ``run_batch``
+    (``superstep`` and ``readout`` raise ``ValueError``).
     """
 
     measure = "tk"
@@ -127,21 +135,24 @@ class TemporalKatz:
     def param_ids(self) -> list[str]:
         return ["tk_b%0.2f_%s" % (b, w) for b, w in self.params]
 
-    # -- superstep ---------------------------------------------------------
+    # -- fold path: superstep + readout ------------------------------------
+    def _fold_only(self, name: str) -> None:
+        if self.path == "walk":
+            raise ValueError(
+                f"{name}() is the fold path's per-window step; a walk-path "
+                "measure advances and reads out through run_batch()"
+            )
+
     def superstep(self, window: DataFrame | None, hi: float) -> None:
-        """Advance state over one snapshot window ending at ``hi``.
+        """Advance fold-path state over one snapshot window ending at ``hi``.
 
         ``window`` must contain columns (key, src, dst, seq) where ``key``
         is the measure's time axis (epoch seconds or edge index); None or
         empty means an inactive interval (state untouched — decay is lazy).
         """
-        if self.path == "fold":
-            if window is not None:
-                self._superstep_fold(window)
-        elif window is None:
-            self._rebase(hi)
-        else:
-            self.run_batch(window, [(0, hi, hi)], readouts=False)
+        self._fold_only("superstep")
+        if window is not None:
+            self._superstep_fold(window)
 
     # fold path: one ordered Arrow task, exact for every weighter
     def _superstep_fold(self, window: DataFrame) -> None:
@@ -209,7 +220,8 @@ class TemporalKatz:
         intervals: list[tuple[int, float, float]],
         readouts: bool = True,
     ) -> dict[int, pd.DataFrame]:
-        """Advance the walk path over B consecutive windows with ONE Spark job.
+        """Advance the walk path over B >= 1 consecutive windows with ONE
+        Spark job — the walk path's only way to advance and read out.
 
         ``intervals``: ordered [(interval_id, hi, readout_time)]; ``df``
         must contain exactly the edges of those windows (key <= last hi).
@@ -239,7 +251,7 @@ class TemporalKatz:
             tol=self.walk_tol,
             block_size=self.walk_block,
             edge_transform=self.walk_edge_transform,
-            layers=self._walk_layers,
+            layers=self._layers,
         )
         self.walk_metrics = [
             dict(chunk_end=t_last, chunks=len(chunk_plan), **m) for m in mets
@@ -253,7 +265,7 @@ class TemporalKatz:
             touched[es_nodes] = True
         outs: dict[int, pd.DataFrame] = {}
         if readouts:
-            n_rows = self._walk_layers * self.p
+            n_rows = self._layers * self.p
             fill_nodes = np.nonzero(active_pre & ~touched)[0]
             pids = np.asarray(self.param_ids, dtype=object)
             for iid, hi, rt in intervals:
@@ -281,8 +293,8 @@ class TemporalKatz:
                 )
         return outs
 
-    # walk-state hooks (overridden by the truncated variant)
-    _walk_layers = 1
+    # state-layout hooks (overridden by the truncated variant)
+    _layers = 1
 
     def _walk_y0(self) -> np.ndarray:
         return self.ranks
@@ -292,23 +304,26 @@ class TemporalKatz:
 
     # -- read-out ----------------------------------------------------------
     def readout(self, boundary: float) -> pd.DataFrame:
-        """Scores of every ever-active node, decayed to ``boundary``.
-
-        Returns tidy (param_id, node_id, score).
+        """Fold-path scores of every ever-active node, decayed from its
+        last activation to ``boundary``: tidy (param_id, node_id, score),
+        one block per (layer, param) in ``param_ids`` order.
         """
-        active = ~np.isnan(self.last)
-        idx = np.nonzero(active)[0]
-        frames = []
-        for j, pid in enumerate(self.param_ids):
-            if self.path == "walk":
-                base = self.basis if self.basis is not None else boundary
-                scores = self.ranks[j, idx] * self.weighters[j].weight(boundary - base)
-            else:
-                dt = boundary - self.last[idx]
-                scores = self.ranks[j, idx] * self.weighters[j].weight_np(dt)
-            frames.append(
-                pd.DataFrame({"param_id": pid, "node_id": idx, "score": scores})
+        self._fold_only("readout")
+        idx = np.nonzero(~np.isnan(self.last))[0]
+        ranks = self.ranks.reshape(self.p, self._layers, self.n)
+        decay = [w.weight_np(boundary - self.last[idx]) for w in self.weighters]
+        pids = self.param_ids
+        frames = [
+            pd.DataFrame(
+                {
+                    "param_id": pids[layer * self.p + j],
+                    "node_id": idx,
+                    "score": ranks[j, layer, idx] * decay[j],
+                }
             )
+            for layer in range(self._layers)
+            for j in range(self.p)
+        ]
         if not frames:
             return pd.DataFrame(columns=["param_id", "node_id", "score"])
         return pd.concat(frames, ignore_index=True)
@@ -404,9 +419,9 @@ class TruncatedTemporalKatz(TemporalKatz):
         )
         self.last = result["last"].to_numpy(dtype=np.float64).copy()
 
-    # walk-state hooks: (p, k*n) layer-blocked state <-> (k*p, n) rows
+    # state-layout hooks: (p, k*n) layer-blocked state <-> (k*p, n) rows
     @property
-    def _walk_layers(self) -> int:
+    def _layers(self) -> int:
         return self.k
 
     def _walk_y0(self) -> np.ndarray:
@@ -420,30 +435,6 @@ class TruncatedTemporalKatz(TemporalKatz):
         # vals: (m, k*p) layer-major columns
         per = vals.T.reshape(self.k, self.p, len(nodes)).transpose(1, 0, 2)
         self.ranks.reshape(self.p, self.k, self.n)[:, :, nodes] = per
-
-    def readout(self, boundary: float) -> pd.DataFrame:
-        active = ~np.isnan(self.last)
-        idx = np.nonzero(active)[0]
-        ranks = self.ranks.reshape(self.p, self.k, self.n)
-        frames = []
-        pids = self.param_ids
-        for layer in range(self.k):
-            for j in range(self.p):
-                pid = pids[layer * self.p + j]
-                if self.path == "walk":
-                    base = self.basis if self.basis is not None else boundary
-                    scores = ranks[j, layer, idx] * self.weighters[j].weight(
-                        boundary - base
-                    )
-                else:
-                    dt = boundary - self.last[idx]
-                    scores = ranks[j, layer, idx] * self.weighters[j].weight_np(dt)
-                frames.append(
-                    pd.DataFrame({"param_id": pid, "node_id": idx, "score": scores})
-                )
-        if not frames:
-            return pd.DataFrame(columns=["param_id", "node_id", "score"])
-        return pd.concat(frames, ignore_index=True)
 
 
 def _stack_cols(ranks: np.ndarray, n: int, p: int, k: int) -> list[np.ndarray]:

@@ -29,7 +29,6 @@ from __future__ import annotations
 
 import numpy as np
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from ..functions.weights import Weighter
 from .walk import (
@@ -70,10 +69,11 @@ class DistributedTemporalKatz(ClosureStateMeasure):
     """Param-vectorized temporal Katz with fully distributed state.
 
     Driver-protocol surface mirrors :class:`TemporalKatz` (``measure``,
-    ``param_ids``, ``can_batch``, ``run_batch``) but ``distributed =
-    True`` tells :class:`SuperstepDriver` that ``run_batch`` returns a
-    tidy read-out *DataFrame* covering the whole chunk, to be written
-    with a partitioned distributed write instead of driver-side pandas.
+    ``param_ids``, ``run_batch``) but ``distributed = True`` tells
+    :class:`SuperstepDriver` that ``run_batch`` — the one way this
+    measure advances — returns a tidy read-out *DataFrame* covering the
+    whole chunk, to be written with a partitioned distributed write
+    instead of driver-side pandas.
     """
 
     measure = "tk"
@@ -138,17 +138,6 @@ class DistributedTemporalKatz(ClosureStateMeasure):
         ro = self._advance(out, readouts, extra=extra)
         self.basis = float(chunk_plan[-1][0])
         return ro
-
-    def readout_df(self, df_or_none=None) -> DataFrame | None:
-        """Scores at the current basis as a DataFrame (no decay shift):
-        derived from the carried state frame."""
-        if self.state is None:
-            return None
-        pid_arr = F.array(*[F.lit(p) for p in self.param_ids])
-        return self.state.select(
-            F.col("node").alias("node_id"),
-            F.posexplode("vals").alias("pos", "score"),
-        ).select(pid_arr[F.col("pos")].alias("param_id"), "node_id", "score")
 
     # -- checkpoint protocol (frames, driver-persisted as parquet) -------
     def state_frames(self) -> dict[str, DataFrame | None]:

@@ -895,16 +895,6 @@ class ClosureStateMeasure:
     distributed = True
     _out_cached: DataFrame | None = None
 
-    def can_batch(self) -> bool:
-        return True
-
-    def superstep(self, window: DataFrame | None, hi: float) -> None:
-        if window is None:
-            # an inactive interval is a no-op: decay is lazy (the next
-            # batch rebases across the whole gap) and TPR has none
-            return
-        self.run_batch(window, [(0, float(hi), float(hi))], readouts=False)
-
     def _advance(
         self,
         out: DataFrame,

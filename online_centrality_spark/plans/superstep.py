@@ -7,13 +7,15 @@ snapshot interval:
 
 1. Edges are bucketed once into snapshot intervals with a JVM column
    expression over the boundary array (Catalyst prunes on it afterwards).
-2. Per emitted interval, each online measure advances one superstep over
-   the interval's edge window, then reads out scores decayed to the
-   boundary; static measures recompute on the total / sliding-window
-   graph (plain range predicates over ``interval_id``).
+2. Per chunk of up to ``batch_size`` emitted intervals, each batchable
+   online measure advances over the chunk's edges with one ``run_batch``
+   and reads out every boundary in it; fold-path Temporal Katz advances
+   one ``superstep`` per interval window, then reads out scores decayed
+   to the boundary; static measures recompute on the total /
+   sliding-window graph (plain range predicates over ``interval_id``).
 3. Scores and per-interval metrics land in parquet partitioned by
-   ``snapshot_id``; measure state is checkpointed per superstep, so a
-   killed run resumes from the last completed interval with identical
+   ``snapshot_id``; measure state is checkpointed per chunk, so a
+   killed run resumes from the last completed chunk with identical
    results (tested).
 """
 
@@ -126,10 +128,14 @@ class SuperstepDriver:
         persist_edges: bool = True,
         static_distributed: bool = False,
     ) -> list[SnapshotInterval]:
-        """``batch_size`` > 1 groups consecutive snapshot intervals so
-        walk-path temporal measures advance B windows with one Spark job
-        (``run_batch``); read-outs per boundary stay driver-side. Other
-        measures run one superstep per interval as usual.
+        """``batch_size`` groups consecutive snapshot intervals into
+        chunks of up to B. A batchable measure — distributed-state, or
+        ``can_batch()`` (the walk-path Temporal Katz) — advances and reads
+        out a whole chunk with one ``run_batch`` call, whatever the chunk
+        size, so B = 1 is one call per interval; a walk-path measure's
+        read-outs per boundary stay driver-side. Fold-path Temporal Katz
+        is the only online measure that still runs one ``superstep`` +
+        ``readout`` per interval; static measures recompute per interval.
 
         ``persist_edges=False`` skips caching the bucketed edge frame —
         right when the source is a cheap columnar re-scan (parquet) and
@@ -167,22 +173,20 @@ class SuperstepDriver:
             remaining[i : i + batch_size]
             for i in range(0, len(remaining), batch_size)
         ]
-        # distributed-state measures (scores stay DataFrames end-to-end)
-        # ALWAYS take the batch path, whatever the chunk size
+        # batchable measures take the batch path whatever the chunk size:
+        # distributed-state ones (scores stay DataFrames end-to-end) and
+        # driver-state ones that can batch (walk-path Temporal Katz)
         dist = [m for m in online if getattr(m, "distributed", False)]
+        batched = [
+            m for m in online
+            if m not in dist and getattr(m, "can_batch", lambda: False)()
+        ]
         self._dist_only = (
             bool(dist)
             and len(dist) == len(online)
             and (not static or static_distributed)
         )
         for chunk in chunks:
-            t_chunk = _time.time()
-            batched = (
-                [m for m in online if m not in dist
-                 and getattr(m, "can_batch", lambda: False)()]
-                if len(chunk) > 1
-                else []
-            )
             batch_outs: dict[int, dict] = {}
             if batched or dist:
                 cdf = bucketed.filter(
@@ -250,7 +254,6 @@ class SuperstepDriver:
                 # the whole driver-side tail.
                 self._join_writes()
                 self._checkpoint(online, chunk[-1].interval_id)
-            del t_chunk
         self._join_writes()
         return schedule
 
@@ -605,4 +608,8 @@ class SuperstepDriver:
         return out
 
     def metrics(self) -> DataFrame:
-        return self.spark.read.parquet(str(self.out_dir / "_metrics"))
+        """Per-interval rows (take_snapshot parity). The per-chunk
+        ``convergence_*`` files beside them have another schema."""
+        return self.spark.read.parquet(
+            str(self.out_dir / "_metrics" / "intervals_*.parquet")
+        )

@@ -15,7 +15,7 @@ Covered semantics:
 - TemporalKatz / TruncatedTemporalKatz lazy decay + update
   (``temporal_katz_computer.py:26-51,104-117``)
 - TemporalPageRank update rule (``temporal_pagerank.py:39-52``)
-- DecayedIndegree snapshot recompute over dedup in-edges
+- decayed indegree: snapshot recompute over dedup in-edges
   (``decayed_indegree_computer.py:36-60,71-87``; batch_score_part="" path)
 - static indegree / negative-beta / PageRank / harmonic on total or
   sliding-window dedup graphs (``static_*_computer.py``,

@@ -98,10 +98,17 @@ def test_batched_walk_writes_convergence_metrics(spark, tmp_path):
         [(0.5, ExponentialWeighter(norm=3600.0, base=0.5))], n_nodes, path="walk"
     )
     drv = SuperstepDriver(spark, str(tmp_path / "out"))
-    drv.run(edges, boundaries, "epoch", online=[tk], batch_size=3)
+    sched = drv.run(edges, boundaries, "epoch", online=[tk], batch_size=3)
     files = glob.glob(str(tmp_path / "out" / "_metrics" / "convergence_tk_*.parquet"))
     assert files
     pdf = pd.concat([pd.read_parquet(f) for f in files])
     assert {"measure", "partition", "rounds", "residual", "edges"} <= set(pdf.columns)
     assert (pdf["measure"] == "tk").all()
     assert pdf["edges"].sum() > 0
+    # metrics() reads the per-interval rows only, not the convergence
+    # files beside them: one non-null row per emitted interval
+    met = drv.metrics().toPandas()
+    cols = ["interval_id", "total_nodes", "snapshot_edges"]
+    assert set(cols) <= set(met.columns)
+    assert sorted(met["interval_id"]) == [s.interval_id for s in sched]
+    assert met[cols].notna().all().all()

@@ -2,9 +2,9 @@
 
 Parity vs the reference-semantics oracle (dedup in-edge last-activation
 sums, ``decayed_indegree_computer.py:36-87``) over a multi-snapshot
-replay with batching, empty intervals, and timestamp ties; kill/resume
-parity through the SuperstepDriver checkpoint protocol; and agreement
-with the driver-state :class:`DecayedIndegree` on the same replay.
+replay, one interval per chunk and batched, with empty intervals and
+timestamp ties; and kill/resume parity through the SuperstepDriver
+checkpoint protocol.
 """
 
 import numpy as np
@@ -15,10 +15,7 @@ from online_centrality_spark.functions.weights import (
     ExponentialWeighter,
     PowerWeighter,
 )
-from online_centrality_spark.operators import (
-    DecayedIndegree,
-    DistributedDecayedIndegree,
-)
+from online_centrality_spark.operators import DistributedDecayedIndegree
 from online_centrality_spark.plans.superstep import SuperstepDriver
 from tests.oracle.reference_oracle import OracleDecayedIndegree, OracleReplay
 
@@ -80,7 +77,8 @@ def assert_did_parity(got, captured, sched):
                 assert g[n] == pytest.approx(v, rel=1e-9, abs=1e-12), (pid, i, n)
 
 
-def test_did_distributed_parity(spark, did_stream, tmp_path):
+@pytest.mark.parametrize("batch_size", [1, 4])
+def test_did_distributed_parity(spark, did_stream, tmp_path, batch_size):
     stream, edges = did_stream
     boundaries = [4000 * (i + 1) for i in range(10)]
     captured = oracle_did_snapshots(stream, boundaries)
@@ -88,30 +86,9 @@ def test_did_distributed_parity(spark, did_stream, tmp_path):
     driver = SuperstepDriver(spark, str(tmp_path / "out"))
     sched = driver.run(
         edges, boundaries, "epoch",
-        online=[DistributedDecayedIndegree(DID_PARAMS)], batch_size=4,
+        online=[DistributedDecayedIndegree(DID_PARAMS)], batch_size=batch_size,
     )
     assert_did_parity(scores_map(driver), captured, sched)
-
-
-def test_did_distributed_matches_driver_state(spark, did_stream, tmp_path):
-    """Same replay, both implementations, unbatched (the driver-state
-    variant has no batch path) — identical score tables."""
-    stream, edges = did_stream
-    boundaries = [8000 * (i + 1) for i in range(5)]
-
-    d1 = SuperstepDriver(spark, str(tmp_path / "a"))
-    d1.run(edges, boundaries, "epoch", online=[DecayedIndegree(DID_PARAMS, spark)])
-    d2 = SuperstepDriver(spark, str(tmp_path / "b"))
-    d2.run(
-        edges, boundaries, "epoch",
-        online=[DistributedDecayedIndegree(DID_PARAMS)],
-    )
-    m1, m2 = scores_map(d1), scores_map(d2)
-    assert set(m1) == set(m2)
-    for k in m1:
-        assert set(m1[k]) == set(m2[k]), k
-        for n, v in m1[k].items():
-            assert m2[k][n] == pytest.approx(v, rel=1e-12, abs=1e-12), (k, n)
 
 
 def test_did_distributed_resume(spark, did_stream, tmp_path):

@@ -6,10 +6,10 @@ import pytest
 
 from online_centrality_spark.functions.weights import ExponentialWeighter
 from online_centrality_spark.operators import (
+    DistributedDecayedIndegree,
     DistributedTemporalPageRank,
     attach_closure_components,
 )
-from online_centrality_spark.operators.decayed_indegree import DecayedIndegree
 from online_centrality_spark.operators.temporal_katz import TemporalKatz
 from online_centrality_spark.plans.superstep import SuperstepDriver
 from online_centrality_spark.sources.edges import edges_from_transcripts
@@ -18,11 +18,11 @@ from online_centrality_spark.sources.transcripts import transcripts_spark
 PARAMS = [(1.0, ExponentialWeighter(norm=3600.0, base=0.5))]
 
 
-def make_measures(spark, n_nodes, tk_path):
+def make_measures(n_nodes, tk_path):
     return [
         TemporalKatz(PARAMS, n_nodes, path=tk_path),
         DistributedTemporalPageRank([(0.85, 0.5)]),
-        DecayedIndegree([ExponentialWeighter(norm=3600.0, base=0.5)], spark),
+        DistributedDecayedIndegree([ExponentialWeighter(norm=3600.0, base=0.5)]),
     ]
 
 
@@ -45,7 +45,7 @@ def test_kill_and_resume_identical(spark, tmp_path, tk_path):
     # full uninterrupted run
     full = SuperstepDriver(spark, str(tmp_path / "full"), str(tmp_path / "ckpt_full"))
     full.run(
-        edges, boundaries, "epoch", online=make_measures(spark, n_nodes, tk_path)
+        edges, boundaries, "epoch", online=make_measures(n_nodes, tk_path)
     )
     want = scores_map(full)
 
@@ -55,7 +55,7 @@ def test_kill_and_resume_identical(spark, tmp_path, tk_path):
         edges,
         boundaries,
         "epoch",
-        online=make_measures(spark, n_nodes, tk_path),
+        online=make_measures(n_nodes, tk_path),
         max_index=5,
     )
     assert sched1[-1].interval_id == 4
@@ -66,7 +66,7 @@ def test_kill_and_resume_identical(spark, tmp_path, tk_path):
         edges,
         boundaries,
         "epoch",
-        online=make_measures(spark, n_nodes, tk_path),
+        online=make_measures(n_nodes, tk_path),
         resume=True,
     )
     got = scores_map(resumed)

@@ -504,8 +504,13 @@ def test_label_propagation_returns_at_round_cap(spark):
 
 
 def test_fixpoint_loops_release_cached_inputs(spark):
-    """The label loops and the bucketed-CC harness leave no cache
-    entries behind once their output is collected."""
+    """The label loops, the bucketed-CC harness and the bridge family
+    leave no cache entries behind once their output is collected."""
+    from online_centrality_spark.operators import (
+        articulation_points,
+        bridges,
+        two_edge_components,
+    )
     from online_centrality_spark.operators.components import (
         seeded_label_spreading,
         threshold_profile,
@@ -524,6 +529,9 @@ def test_fixpoint_loops_release_cached_inputs(spark):
     connected_components(df, collect_threshold=0).collect()
     threshold_profile(wdf, [0.0, 5.0], collect_threshold=0).collect()
     attack_robustness(df, max_remove=2, collect_threshold=0).collect()
+    assert {(r["a"], r["b"]) for r in bridges(df).collect()} == {(0, 1), (1, 2)}
+    assert {r["node_id"] for r in articulation_points(df).collect()} == {1, 2}
+    assert len(two_edge_components(df).collect()) == 5
     assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
 
 
@@ -567,6 +575,20 @@ def test_power_loop_and_sources_release_cached_inputs(spark):
         "doc_id long, text string",
     )
     ngram_jaccard_pairs(docs, n=2, threshold=0.1).collect()
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
+def test_supplier_customer_queries_release_cached_inputs(spark):
+    """The contract queries that share one supplier->customer edge frame
+    between two rankings leave no cache entries behind."""
+    import sys
+
+    sys.path.insert(0, ".")
+    import __spark_entry__ as entry
+
+    spark.catalog.clearCache()
+    assert entry.q_spam_mass(spark, entry.SF_SMOKE).collect()
+    assert entry.q_rank_overlap(spark, entry.SF_SMOKE).collect()
     assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
 
 

@@ -14,10 +14,10 @@ from online_centrality_spark.functions.weights import (
     RayleighWeighter,
 )
 from online_centrality_spark.operators import (
+    DistributedDecayedIndegree,
     DistributedTemporalPageRank,
     attach_closure_components,
 )
-from online_centrality_spark.operators.decayed_indegree import DecayedIndegree
 from online_centrality_spark.operators.temporal_katz import (
     TemporalKatz,
     TruncatedTemporalKatz,
@@ -115,7 +115,9 @@ def assert_close_maps(got: dict, want: dict, ctx: str, atol=1e-9):
 def test_temporal_parity_epoch(spark, edge_data, tmp_path, path):
     """Temporal PageRank's epoch-mode parity on this same fixture runs in
     test_batching: its one engine pays several Spark jobs per interval,
-    which this per-interval replay would repeat for every Katz path."""
+    which this per-interval replay would repeat for every Katz path.
+    Decayed indegree has one engine too, so only the walk case runs it
+    (each one-interval chunk costs it a Spark write)."""
     edges, stream, n_nodes = edge_data
     boundaries = make_boundaries(stream, delta=1800, count=20)
     params_tk = EXP_PARAMS if path == "walk" else EXP_PARAMS + NONFACT_PARAMS
@@ -125,9 +127,9 @@ def test_temporal_parity_epoch(spark, edge_data, tmp_path, path):
 
     tk = TemporalKatz(params_tk, n_nodes, path=path)
     ttk = TruncatedTemporalKatz(params_tk, n_nodes, k=k, path=path)
-    did = DecayedIndegree(DID_PARAMS, spark)
+    did = [DistributedDecayedIndegree(DID_PARAMS)] if path == "walk" else []
     driver = SuperstepDriver(spark, str(tmp_path / f"out_{path}"))
-    sched = driver.run(edges, boundaries, "epoch", online=[tk, ttk, did])
+    sched = driver.run(edges, boundaries, "epoch", online=[tk, ttk] + did)
     assert [s.interval_id for s in sched] == sorted(captured.keys())
     got = engine_scores_map(driver)
 
@@ -145,7 +147,7 @@ def test_temporal_parity_epoch(spark, edge_data, tmp_path, path):
                 want = {n: v[j] for n, v in captured[i]["ttk"][layer].items()}
                 assert_close_maps(got[(pid, i)], want, f"ttk {pid} snap {i}")
         # decayed indegree
-        for j, w in enumerate(DID_PARAMS):
+        for j, w in enumerate(DID_PARAMS if did else []):
             pid = "did_%s" % w
             want = {n: v[j] for n, v in captured[i]["did"].items()}
             assert_close_maps(got[(pid, i)], want, f"did {pid} snap {i}")
@@ -161,7 +163,7 @@ def test_temporal_parity_index_mode(spark, edge_data, closure_edges, tmp_path, p
     tk = TemporalKatz(params_tk, n_nodes, path=path)
     ttk = TruncatedTemporalKatz(params_tk, n_nodes, k=2, path=path)
     tpr = DistributedTemporalPageRank(TPR_PARAMS)
-    did = DecayedIndegree(DID_PARAMS, spark)
+    did = DistributedDecayedIndegree(DID_PARAMS)
     driver = SuperstepDriver(spark, str(tmp_path / f"out_idx_{path}"))
     sched = driver.run(
         closure_edges, boundaries, "index", online=[tk, ttk, tpr, did]
